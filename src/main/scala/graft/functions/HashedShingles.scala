@@ -21,9 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * a stack of higher-order functions, which Catalyst evaluates
   * INTERPRETED (HOF lambdas never enter whole-stage codegen), and it
   * materializes the token array, every sliced sub-array, every shingle
-  * string, and the distinct array before hashing. HashBench measured the
-  * dedup family's per-doc floor to be exactly this overhead, not the
-  * hashing (md5→xxh64 alone moved p02 only 2.46→1.96 s at sf0.1).
+  * string, and the distinct array before hashing. The dedup family's
+  * per-doc floor was measured to be exactly this overhead, not the
+  * hashing (md5→xxh64 alone moved p02 only 2.46→1.96 s at sf0.1;
+  * round-3 state in BASELINE.md "Measured engine baseline — round 2").
   *
   * This expression does the whole chain in a tight loop over the string:
   * one lowercase, one split, a reused StringBuilder per gram, a

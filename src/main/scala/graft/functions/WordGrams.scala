@@ -84,9 +84,11 @@ object WordGrams {
   /** Runtime kernel — static so generated code can call it directly.
     * One pass to record space positions, one byte-range slice per gram.
     * Gram `g` covers words `[g·step, min(g·step + n, w))`; the gram
-    * count `max(ceil((w - n) / step) + 1, 1)` reduces to `w - n + 1`
-    * for `step = 1` and to `ceil(w / n)` for `step = n` — exactly the
-    * two composites in the class doc.
+    * count `max(min(ceil((w - n) / step), (w - 1) / step) + 1, 1)`
+    * reduces to `w - n + 1` for `step = 1` and to `ceil(w / n)` for
+    * `step = n` — exactly the two composites in the class doc. The
+    * `(w - 1) / step` bound keeps the last start word inside the text
+    * when `step > n`.
     */
   def compute(text: UTF8String, n: Int, lowered: Boolean,
       step: Int): ArrayData = {
@@ -110,7 +112,8 @@ object WordGrams {
       i += 1
     }
     starts(w) = bytes.length + 1
-    val numGrams = math.max((w - n + step - 1) / step + 1, 1)
+    val numGrams = math.max(
+      math.min((w - n + step - 1) / step, (w - 1) / step) + 1, 1)
     val out = new Array[Any](numGrams)
     var g = 0
     while (g < numGrams) {
@@ -122,10 +125,6 @@ object WordGrams {
     }
     new GenericArrayData(out)
   }
-
-  /** Binary-compatibility overload (pre-round-20 generated code). */
-  def compute(text: UTF8String, n: Int, lowered: Boolean): ArrayData =
-    compute(text, n, lowered, 1)
 
   /** Column API: word `n`-grams of `lower(text)`, one gram per start
     * position (whole-text gram for texts shorter than `n` words).

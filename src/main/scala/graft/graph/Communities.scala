@@ -34,7 +34,7 @@ object Communities {
     * neighbors to the minimum of its closed neighborhood. Input/output
     * edges oriented `u > v`.
     */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
+  private[graph] def largeStar(e: DataFrame): DataFrame = {
     val sym = e.select(col("u").as("a"), col("v").as("b"))
       .union(e.select(col("v").as("a"), col("u").as("b")))
     val m = sym.groupBy("a").agg(min(col("b")).as("mb"))
@@ -51,7 +51,7 @@ object Communities {
     * `u > v` is an input invariant, so min over `v` IS the closed-
     * neighborhood minimum on the small side.
     */
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
+  private[graph] def smallStar(e: DataFrame): DataFrame = {
     val m = e.groupBy("u").agg(min(col("v")).as("m"))
     e.join(m.hint("shuffle_hash"), Seq("u"))
       .select(explode(array(

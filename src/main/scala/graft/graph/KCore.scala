@@ -56,14 +56,18 @@ import graft.plans.Lineage
   *     ids, and switches to a plain (planner-chosen) join above the
   *     budget.
   *
-  * A round whose worst-case broadcast volume `k·frontierRows +
-  * removedBufRows` exceeds `BroadcastFrontierMax` falls back to one
-  * full-recompute round of the old shape (key-partitioned aggregate +
-  * two hash semi-joins), which simultaneously re-derives exact degrees
-  * — so the adaptive loop never ships an unbounded broadcast. Driver
-  * state stays one scalar per round. Rounds are bounded by the peel
-  * cascade depth (O(n) worst case on a path, which is why `maxRounds`
-  * throws loudly instead of emitting a half-peeled core).
+  * A round whose frontier and loss broadcasts together —
+  * `k·frontierRows + removedBufRows` rows — exceed `BroadcastFrontierMax`
+  * falls back to one full-recompute round of the old shape
+  * (key-partitioned aggregate + two hash semi-joins), which
+  * simultaneously re-derives exact degrees — so the adaptive loop never
+  * ships an unbounded broadcast. Counting the same round's compaction
+  * too, the worst case is `k·frontierRows + 2·removedBufRows` rows; the
+  * check does not bound that sum, but every single broadcast stays
+  * ≤ `BroadcastFrontierMax`. Driver state stays one scalar per round.
+  * Rounds are bounded by the peel cascade depth (O(n) worst case on a
+  * path, which is why `maxRounds` throws loudly instead of emitting a
+  * half-peeled core).
   */
 object KCore {
 
@@ -75,11 +79,11 @@ object KCore {
     */
   val BroadcastFrontierMax: Long = 4L << 20
 
-  /** True when one delta round's TOTAL worst-case broadcast rows —
-    * `k·frontierRows + removedBufRows` (frontier ids + the loss bound
-    * of (k−1)·frontierRows survivors and `removedBufRows` uncompacted
-    * removed ids) — fit the budget. Division form avoids overflow for
-    * any `k`/row-count combination.
+  /** True when one delta round's frontier and loss broadcasts —
+    * `k·frontierRows + removedBufRows` rows — fit the budget together;
+    * the compaction's broadcast is bounded on its own (the object doc
+    * gives the round's full worst case). Division form avoids overflow
+    * for any `k`/row-count combination.
     */
   private[graph] def deltaBroadcastBudgetOk(frontierRows: Long, k: Int,
       removedBufRows: Long): Boolean =

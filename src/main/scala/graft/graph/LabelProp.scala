@@ -46,13 +46,12 @@ object LabelProp {
     labels
   }
 
-  /** One synchronous propagation round (pre-cut) — factored so the
-    * loop-plan evidence tool can explain the per-iteration join
-    * directly. The label side is a lineage cut carrying its MEASURED
-    * size (round 20), so the planner hash-builds or broadcasts the
-    * vertex-sized side itself — round-19's SHUFFLE_HASH hint retired.
+  /** One synchronous propagation round (pre-cut). The label side is a
+    * lineage cut carrying its MEASURED size (round 20), so the planner
+    * hash-builds or broadcasts the vertex-sized side itself — round-19's
+    * SHUFFLE_HASH hint retired.
     */
-  private[graft] def oneRound(sym: DataFrame, labels: DataFrame): DataFrame = {
+  private[graph] def oneRound(sym: DataFrame, labels: DataFrame): DataFrame = {
     val top = Window.partitionBy(col("src"))
       .orderBy(col("n").desc, col("nlabel").asc)
     val winners = sym

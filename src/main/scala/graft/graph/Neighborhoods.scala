@@ -31,8 +31,7 @@ object Neighborhoods {
     * appears once per route). The `neighbors` aggregate dedups inside
     * `collect_set`, so the explicit `distinct()` exchange this family
     * used to pay on the Σdeg² hop-2 fan-out — a full extra shuffle of
-    * the engine's biggest intermediate — is only spent by callers that
-    * genuinely need distinct PAIRS ([[neighborPairs]]).
+    * the engine's biggest intermediate — is not spent at all.
     */
   private def rawNeighborPairs(g: PropertyGraph, level: Int,
       maxMidDegree: Option[Long]): DataFrame = {
@@ -53,13 +52,6 @@ object Neighborhoods {
     }
     pairs.filter(col("id") =!= col("nb"))
   }
-
-  /** Neighbor pairs `(id, nb)` within ≤ `level` hops, distinct,
-    * self-excluded. `level` must be 1 or 2.
-    */
-  def neighborPairs(g: PropertyGraph, level: Int,
-      maxMidDegree: Option[Long] = None): DataFrame =
-    rawNeighborPairs(g, level, maxMidDegree).distinct()
 
   /** Per-vertex neighbor set + degree with isolated-vertex backfill:
     * `(id, count, neighbors)` for EVERY vertex of `g`. The distinct

@@ -58,16 +58,15 @@ object PageRank {
     pr.select(col("id"), col("pr").as("pr_fp"))
   }
 
-  /** One synchronous rank round (pre-cut) — factored so the loop-plan
-    * evidence tool can explain the per-iteration join directly.
-    * The rank side is a lineage cut carrying its MEASURED size
-    * (round 20), so the planner hash-builds or broadcasts the
-    * vertex-sized side itself — the round-19 SHUFFLE_HASH hint is
-    * retired (plan checked: no per-round sort of the edge side).
-    * Symmetric graph => every vertex has an in-edge; no left join
-    * against the vertex set is needed to keep isolated rows.
+  /** One synchronous rank round (pre-cut). The rank side is a lineage
+    * cut carrying its MEASURED size (round 20), so the planner
+    * hash-builds or broadcasts the vertex-sized side itself — the
+    * round-19 SHUFFLE_HASH hint is retired (plan checked: no per-round
+    * sort of the edge side). Symmetric graph => every vertex has an
+    * in-edge; no left join against the vertex set is needed to keep
+    * isolated rows.
     */
-  private[graft] def oneRound(symDeg: DataFrame, pr: DataFrame, base: Long,
+  private[graph] def oneRound(symDeg: DataFrame, pr: DataFrame, base: Long,
       dampNum: Long, dampDen: Long): DataFrame =
     symDeg
       .join(pr.withColumnRenamed("id", "src"), Seq("src"))

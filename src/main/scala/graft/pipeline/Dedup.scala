@@ -1284,7 +1284,8 @@ object Dedup {
     * unsorted delta files (every probe scans them all) and one more file
     * per relation per append (footer/open overhead) — and compaction is
     * the recovery; run it on whatever cadence gate latency says
-    * ([[graft.tools.IndexDecay]] measures the decay and the recovery).
+    * (BASELINE.md "Round-15: index append decay + compaction recovery"
+    * holds the measured decay and recovery).
     *
     * Reads the whole index once, localCheckpoints the compacted
     * relations (parquet cannot overwrite its own input mid-scan), then

@@ -17,8 +17,9 @@ import org.apache.spark.sql.graftshim.Shim
   * ~8 of the HGN loop on Hamsterster the driver spent minutes per step
   * multiplying million-digit `BigInt`s inside
   * `SizeInBytesOnlyStatsPlanVisitor` (single-core, planning-time, no
-  * cluster work at all). Measured with StatsProbe: the digit count of
-  * `sizeInBytes` doubles every checkpointed join iteration.
+  * cluster work at all). Measured (SCALE.md "Ground rules applied
+  * everywhere"): the digit count of `sizeInBytes` doubles every
+  * checkpointed join iteration.
   *
   * [[cut]] therefore re-wraps the checkpointed RDD in a fresh
   * `LogicalRDD` WITHOUT the origin plan's propagated stats — but (round

@@ -534,7 +534,7 @@ object SourceMlQueries {
       // stream-stream join provisions 4 state stores per shuffle
       // partition and pays a per-partition commit every micro-batch —
       // measured ~90% of this query's wall at 32 partitions
-      // (StreamJoinDecompose, BASELINE round-19: 7.8 s at 32 parts vs
+      // (BASELINE.md "Round-19: s11 decomposed": 7.8 s at 32 parts vs
       // 2.6 s at 8 for identical output; per-batch slope 2.8 -> 0.65
       // s). Round-19: the inline conf became the family-wide derived
       // policy (StreamingOps.withStatePartitions).

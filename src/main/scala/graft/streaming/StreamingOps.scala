@@ -32,7 +32,7 @@ object StreamingOps {
 
   /** Scale-adaptive STATE-partition count for a streaming start whose
     * input is `bytes` on disk. Round-19 generalization of the round-18
-    * s11 finding (`tools/StreamJoinDecompose`, BASELINE): a stateful
+    * s11 finding (BASELINE.md "Round-19: s11 decomposed"): a stateful
     * operator provisions one state store per shuffle partition per
     * stateful operator (4 for a stream-stream join) and pays a
     * per-partition commit EVERY micro-batch, so at small state volume

@@ -110,6 +110,21 @@ class WordGramsSpec extends SparkSpec {
     assert(diff.isEmpty, s"mismatches: ${diff.take(3).mkString("; ")}")
   }
 
+  test("step > n: starts stay inside the text, one gram per start") {
+    import org.apache.spark.sql.graftshim.Shim
+    import spark.implicits._
+    def grams(text: String, n: Int, st: Int): Seq[String] =
+      Seq(text).toDF("text")
+        .select(Shim.column(WordGrams(Shim.expression(col("text")), n,
+          step = st)))
+        .head().getSeq[String](0)
+    assert(grams("a b", 1, 3) == Seq("a"))
+    assert(grams("a b c d", 1, 3) == Seq("a", "d"))
+    GraftExtensions.register(spark)
+    assert(spark.sql("SELECT word_grams('a b', 1, true, 3)")
+      .head().getSeq[String](0) == Seq("a"))
+  }
+
   test("NULL text yields NULL (CharGrams convention; zero rows under posexplode)") {
     import spark.implicits._
     val docs = Seq[Option[String]](None, Some("a b")).toDF("text")

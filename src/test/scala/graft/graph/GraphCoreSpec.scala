@@ -108,6 +108,17 @@ class GraphCoreSpec extends SparkSpec {
     assert(b.size == 8)
   }
 
+  test("betweenness rejects negative vertex ids") {
+    import spark.implicits._
+    implicit val s = spark
+    val neg = PropertyGraph(Seq(-1L, 2L, 3L).toDF("id"),
+      Seq((-1L, 2L), (2L, 3L)).toDF("src", "dst"))
+    val ex = intercept[IllegalArgumentException] {
+      Betweenness.run(neg, 2)
+    }
+    assert(ex.getMessage.contains("non-negative vertex ids"))
+  }
+
   test("edge weights over the deletable edge's common neighborhood") {
     import spark.implicits._
     val edgesR = RMetrics.run(g, 0.45, 0.9)
