@@ -94,21 +94,12 @@ object SessionTuning {
     */
   def autoConfs(dataDir: String, cores: Int): Seq[(String, String)] = {
     val parts = autoShufflePartitions(dataDir, cores)
-    // preferSortMergeJoin=false (guide §3.1/§9, round 20): let the
-    // planner pick a shuffled-hash join whenever one side of an
-    // equi-join is small enough to hash per partition (3x smaller than
-    // the other side AND under partitions × autoBroadcastJoinThreshold).
-    // This replaces round-19's per-site SHUFFLE_HASH hints on the
-    // vertex-sized sides of the iterated graph joins — with Lineage.cut
-    // now re-planting MEASURED sizes the planner sees those sides'
-    // real bytes and makes the call itself, at every scale: at 100 TB a
-    // vertex relation that outgrows the per-partition hash budget
-    // degrades to sort-merge automatically (the hint would have forced
-    // a hash build regardless). Partition counts track data bytes
-    // (above), so the per-partition build side stays bounded.
-    val base = Seq(
-      "spark.sql.shuffle.partitions" -> parts.toString,
-      "spark.sql.join.preferSortMergeJoin" -> "false")
+    // No global preferSortMergeJoin=false: at sf0.1 on 4 cores it
+    // measured no faster on g07/g08/g09/p14/p45 than Spark's default
+    // (5 alternating runs each, within noise), and session-wide it
+    // would let every catalog join hash-build a side the planner
+    // underestimated. Joins that need a hash build say so with a hint.
+    val base = Seq("spark.sql.shuffle.partitions" -> parts.toString)
     if (parts > cores)
       base ++ Seq(
         "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",

@@ -110,12 +110,9 @@ object Communities {
   def connectedComponents(g: PropertyGraph, maxRounds: Int = 64)(
       implicit spark: SparkSession): DataFrame = {
     val verts = g.vertices.select(col("id").cast("long").as("id"))
-    var e = Lineage.cut(
-      g.edges.select(col("src").cast("long").as("s"), col("dst").cast("long").as("d"))
-        .filter(col("s") =!= col("d"))
-        .select(greatest(col("s"), col("d")).as("u"),
-          least(col("s"), col("d")).as("v"))
-        .distinct())
+    var e = Lineage.cut(PropertyGraph.canonical(g.edges.select(
+        col("src").cast("long").as("src"), col("dst").cast("long").as("dst")))
+      .select(col("dst").as("u"), col("src").as("v")))
     var prev = signature(e)
     var converged = false
     var rounds = 0

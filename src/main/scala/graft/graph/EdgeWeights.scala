@@ -92,11 +92,10 @@ object EdgeWeights {
         explode(col("common_neighbors")).as("cn"))
     // J5: attach similarity rows whose src is a common neighbor, with
     // the membership test for the other endpoint applied in-row. The
-    // SHUFFLE_HASH hint matters because both inputs are typically
-    // lineage-cut (`localCheckpoint`) relations with unknown size
-    // stats, which the planner would otherwise sort-merge: hash-build
-    // on the per-partition sims slice skips sorting the fan-out side
-    // entirely (measured 3.5x alone at sf0.1).
+    // SHUFFLE_HASH hint: under Spark's default preferSortMergeJoin=true,
+    // measured cut sizes only decide broadcast or not, and above the
+    // broadcast threshold the join would sort-merge. Hash-building the
+    // sims slice skips sorting the fan-out side (measured 3.5x at sf0.1).
     val j1 = sims.hint("shuffle_hash")
       .join(cn, col("s_src") === col("cn"), "right")
       .filter(col("s_dst").isNotNull && col("similarity").isNotNull &&

@@ -34,39 +34,35 @@ object HgnPipeline {
 
   /** Edges to delete, given weights and betweenness — `get_edges_to_delete`
     * (`main.py:115-141`): join edge_weights against the betweenness table
-    * on its STRUCT column in both orientations (J7), union, then the
-    * compound predicate (P4)
+    * on the unordered pair (J7; the reference's two orientation joins +
+    * union, same rows since betweenness has no self-loops), then (P4)
     *   `weight < maxW  OR  (weight >= maxW AND betweenness > bThres)`.
-    * No dedup — an edge matching in both orientations appears twice, as in
-    * the reference (harmless: deletion is an anti-join).
+    * No dedup — an edge matches both betweenness orientations and appears
+    * twice, as in the reference (harmless: deletion is an anti-join).
     */
   def edgesToDelete(
       edgeWeights: DataFrame,
       betweenness: DataFrame, // (edges: struct<src,dst>, betweenness)
       maxEdgeWeight: Double,
-      betweennessThres: Double): DataFrame = {
-    val fwd = edgeWeights.join(betweenness,
-      edgeWeights("src") === betweenness("edges.src") &&
-      edgeWeights("dst") === betweenness("edges.dst"))
-    val rev = edgeWeights.join(betweenness,
-      edgeWeights("src") === betweenness("edges.dst") &&
-      edgeWeights("dst") === betweenness("edges.src"))
-    fwd.union(rev)
+      betweennessThres: Double): DataFrame =
+    edgeWeights
+      .join(betweenness, PropertyGraph.samePair(col("src"), col("dst"),
+        col("edges.src"), col("edges.dst")))
       .filter(col("edge_weight") < maxEdgeWeight ||
         (col("edge_weight") >= maxEdgeWeight && col("betweenness") > betweennessThres))
       .select("src", "dst")
-  }
 
-  /** Remove `toDelete` edges in either orientation (double left-anti, J8,
-    * `main.py:201-206`) and re-add every keepit == true edge (line 207;
-    * the union can reintroduce an edge listed for deletion — reference
-    * semantics, kept).
+  /** Remove `toDelete` edges in either orientation (one left-anti join on
+    * the unordered pair for the reference's two, J8, `main.py:201-206`)
+    * and re-add every keepit == true edge (line 207). The re-add restores
+    * no deleted edge (`toDelete` ⊆ weight rows ⊆ non-keepit edges, and
+    * keepit is orientation-free); it only duplicates kept edges.
     */
   def deleteEdges(g: PropertyGraph, toDelete: DataFrame, edgesR: DataFrame): PropertyGraph = {
     val del = toDelete.select(col("src").as("d_src"), col("dst").as("d_dst"))
     val kept = g.edges
-      .join(del, col("src") === col("d_src") && col("dst") === col("d_dst"), "left_anti")
-      .join(del, col("src") === col("d_dst") && col("dst") === col("d_src"), "left_anti")
+      .join(del, PropertyGraph.samePair(col("src"), col("dst"),
+        col("d_src"), col("d_dst")), "left_anti")
       .select("src", "dst")
       .union(edgesR.filter(col("keepit")).select("src", "dst"))
     PropertyGraph(g.vertices, kept).dropIsolatedVertices
@@ -88,7 +84,6 @@ object HgnPipeline {
                          // (`spark_manager.py:215-231`, SURVEY §7.1)
     val weights = Lineage.cut(
       EdgeWeights.run(edgesR, similarities, params.featureMinAvg))
-      // referenced by both orientation joins below
     val toDelete = Lineage.cut(edgesToDelete(
       weights, betweenness, params.maxEdgeWeight, params.betweennessThres))
     val n = toDelete.count()

@@ -112,16 +112,10 @@ object KCore {
   def run(edges: DataFrame, k: Int, maxRounds: Int = 100)(
       implicit spark: SparkSession): DataFrame = {
     require(k >= 1, s"k-core needs k >= 1, got $k")
-    val canon = edges
-      .select(col("src").cast("long").as("s"), col("dst").cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("u"),
-        greatest(col("s"), col("d")).as("v"))
-      .distinct()
     // Symmetrize once: degree of x = row count with src = x.
-    var sym = Lineage.cut(
-      canon.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(canon.select(col("v").as("src"), col("u").as("dst"))))
+    var sym = Lineage.cut(PropertyGraph.bothWays(PropertyGraph.canonical(
+      edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst")))))
     var symRows = sym.count()
     // Maintained survivor degrees: degree of x within the graph minus
     // every vertex removed so far. The frontier (deg < k) and the

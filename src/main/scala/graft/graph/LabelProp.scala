@@ -39,8 +39,7 @@ object LabelProp {
   def run(vertices: DataFrame, edges: DataFrame, iters: Int)(
       implicit spark: SparkSession): DataFrame = {
     require(iters >= 1, s"label propagation needs iters >= 1, got $iters")
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = PropertyGraph.bothWays(edges)
     var labels = vertices.select(col("id"), col("id").as("label"))
     for (_ <- 1 to iters) labels = Lineage.cut(oneRound(sym, labels))
     labels
@@ -48,8 +47,8 @@ object LabelProp {
 
   /** One synchronous propagation round (pre-cut). The label side is a
     * lineage cut carrying its MEASURED size (round 20), so the planner
-    * hash-builds or broadcasts the vertex-sized side itself — round-19's
-    * SHUFFLE_HASH hint retired.
+    * broadcasts the vertex-sized side itself whenever it fits the
+    * broadcast threshold — round-19's SHUFFLE_HASH hint retired.
     */
   private[graph] def oneRound(sym: DataFrame, labels: DataFrame): DataFrame = {
     val top = Window.partitionBy(col("src"))

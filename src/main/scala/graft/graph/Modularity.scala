@@ -57,9 +57,8 @@ object Modularity {
       .filter(col("lsrc") === col("ldst"))
       .groupBy(col("lsrc").as("label"))
       .agg(count(lit(1)).as("e_intra"))
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    val deg = PropertyGraph.bothWays(edges)
+      .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val dTot = labels.join(deg, Seq("id"), "left")
       .groupBy(col("label"))
       .agg(sum(coalesce(col("deg"), lit(0L))).as("d_tot"))

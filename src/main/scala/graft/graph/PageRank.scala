@@ -44,7 +44,7 @@ object PageRank {
       s"damping must be a proper fraction, got $dampNum/$dampDen")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = PropertyGraph.bothWays(e)
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // (src, dst, deg_src) computed once, reused every round.
     val symDeg = Lineage.cut(sym.join(deg, Seq("src")))
@@ -60,11 +60,10 @@ object PageRank {
 
   /** One synchronous rank round (pre-cut). The rank side is a lineage
     * cut carrying its MEASURED size (round 20), so the planner
-    * hash-builds or broadcasts the vertex-sized side itself — the
-    * round-19 SHUFFLE_HASH hint is retired (plan checked: no per-round
-    * sort of the edge side). Symmetric graph => every vertex has an
-    * in-edge; no left join against the vertex set is needed to keep
-    * isolated rows.
+    * broadcasts the vertex-sized side itself whenever it fits the
+    * broadcast threshold — the round-19 SHUFFLE_HASH hint is retired.
+    * Symmetric graph => every vertex has an in-edge; no left join
+    * against the vertex set is needed to keep isolated rows.
     */
   private[graph] def oneRound(symDeg: DataFrame, pr: DataFrame, base: Long,
       dampNum: Long, dampDen: Long): DataFrame =
@@ -94,8 +93,7 @@ object PageRank {
       s"damping must be a proper fraction, got $dampNum/$dampDen")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-      col("w")))
+    val sym = PropertyGraph.bothWays(e, "w")
     val wdeg = sym.groupBy(col("src")).agg(
       sum(col("w")).as("wsum"), min(col("w")).as("wmin"))
     // One scalar action serves both guards: vertex count for the base

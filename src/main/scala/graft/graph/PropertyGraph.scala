@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** An undirected property graph over two DataFrames, the engine's core
@@ -12,8 +12,11 @@ import org.apache.spark.sql.functions._
   *     columns (reference schema: `spark_manager/spark_manager.py:113-116`).
   *   - `edges` has `src`/`dst` columns (LongType) and optionally `weight`
   *     (`spark_manager/spark_manager.py:135-147`).
-  *   - Undirected semantics are *emulated*: edges are stored once and
-  *     symmetrized on demand (`graph_tools/graph_tools.py:125-126`).
+  *   - An edge row `(a, b)` is the unordered pair `{a, b}`, in either
+  *     orientation and any multiplicity. Only this file decides edge
+  *     direction: [[canonicalEdges]] is the canonical form (one
+  *     `(least, greatest)` row per pair, no self-loops), and every
+  *     symmetric view derives from it through [[PropertyGraph.bothWays]].
   *
   * Scale notes: every method here is a declarative DataFrame transform, so
   * Catalyst prunes/pushes down and AQE picks join strategies; nothing
@@ -24,19 +27,11 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   require(edges.columns.contains("src") && edges.columns.contains("dst"),
     "edges must have `src` and `dst` columns")
 
-  /** Both orientations of every edge — the reference's
-    * `edges.union(edges.select(dst as src, src as dst))`
-    * (`graph_tools/graph_tools.py:125-126, 171-173, 336-337`).
-    */
-  def symmetrized: DataFrame =
-    edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+  /** Each undirected edge once, as `(src, dst)` with `src < dst`. */
+  def canonicalEdges: DataFrame = PropertyGraph.canonical(edges)
 
-  /** Distinct symmetrized adjacency (drops multi-edges and, defensively,
-    * self-loops). The building block for neighborhoods/paths.
-    */
-  def adjacency: DataFrame =
-    symmetrized.filter(col("src") =!= col("dst")).distinct()
+  /** Distinct adjacency: both orientations of every canonical edge. */
+  def adjacency: DataFrame = PropertyGraph.bothWays(canonicalEdges)
 
   /** Per-vertex degree over the distinct symmetrized adjacency. */
   def degrees: DataFrame =
@@ -64,5 +59,36 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       .join(kept.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
       .join(kept.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
     PropertyGraph(v, e)
+  }
+}
+
+object PropertyGraph {
+
+  /** `(src, dst)` with `src < dst`, one row per unordered pair of
+    * `edges`; self-loops (and rows with a null endpoint) dropped.
+    */
+  def canonical(edges: DataFrame): DataFrame =
+    edges.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"))
+      .distinct()
+
+  /** Equi-join condition: `(aSrc, aDst)` and `(bSrc, bDst)` are the
+    * same unordered pair, in either orientation.
+    */
+  def samePair(aSrc: Column, aDst: Column, bSrc: Column, bDst: Column): Column =
+    least(aSrc, aDst) === least(bSrc, bDst) &&
+      greatest(aSrc, aDst) === greatest(bSrc, bDst)
+
+  /** Every row of `edges` in both orientations, `extra` columns carried
+    * along, in one projection: a two-branch union reads `edges` twice.
+    */
+  def bothWays(edges: DataFrame, extra: String*): DataFrame = {
+    val rest = extra.map(col)
+    edges
+      .select(explode(array(
+        struct(col("src") +: col("dst") +: rest: _*),
+        struct(col("dst").as("src") +: col("src").as("dst") +: rest: _*))).as("e"))
+      .select("e.*")
   }
 }

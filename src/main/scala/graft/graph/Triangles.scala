@@ -32,8 +32,7 @@ object Triangles {
     * isolated/triangle-free vertices backfilled with 0.
     */
   def counts(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = PropertyGraph.bothWays(edges)
     val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val withDeg = sym
       .join(deg.select(col("id").as("src"), col("deg").as("dsrc")), Seq("src"))
@@ -86,8 +85,7 @@ object Triangles {
   def clusteringCoeff(vertices: DataFrame, edges: DataFrame): DataFrame = {
     // Largest n_tri whose 2·tri·10⁶ numerator fits a signed 64-bit Long.
     val maxTri = Long.MaxValue / 2000000L
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = PropertyGraph.bothWays(edges)
     val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     counts(vertices, edges)
       .join(deg, Seq("id"), "left")

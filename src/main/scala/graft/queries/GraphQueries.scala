@@ -420,7 +420,7 @@ object GraphQueries {
     },
 
     // ---- G8 + J8: the edge set after one full HGN deletion round
-    // (double anti-join + keepit re-add; multiset semantics preserved).
+    // (anti-join + keepit re-add; multiset semantics preserved).
     QueryDef(
       "g07_iteration_edges",
       s"""WITH $EDGES, $N2, $DEGREES, $COMMON, $RMETRICS, $SIMS, $WEIGHTS, $BTW,

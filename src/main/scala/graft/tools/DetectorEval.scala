@@ -46,8 +46,7 @@ object DetectorEval {
     val edges0 = GraphCsv.loadEdges(spark, conf.edgesPath,
       conf.edgesHaveWeights, conf.edgesDelimiter, conf.edgesHasHeader)
     val g0 = PropertyGraph(nodes0, edges0)
-    val canon = graft.plans.Lineage.cut(
-      g0.adjacency.filter(col("src") < col("dst")))
+    val canon = graft.plans.Lineage.cut(g0.canonicalEdges)
     val v0 = g0.vertices.select(col("id"))
 
     System.err.println(s"[detector-eval] running HGN deletion loop")

@@ -33,11 +33,29 @@ class PropertiesSpec extends SparkSpec {
   private val seeds = Seq(1L, 7L, 42L, 99L, 1234L)
 
   test("property: symmetrization is idempotent on the adjacency set") {
+    import spark.implicits._
     for (seed <- seeds; edges = sampleEdges(seed) if edges.nonEmpty) {
       val adj = graphOf(edges).adjacency
       val again = adj.union(
         adj.select(col("dst").as("src"), col("src").as("dst"))).distinct()
       assert(again.count() == adj.count(), s"seed $seed")
+      // The same pairs written messily: each row again, every other one
+      // reversed, a self-loop, and the first endpoint's vertex row
+      // dropped. The canonical form and the degrees must not notice.
+      val (a0, b0) = edges.head
+      val messyEdges = edges ++ edges.zipWithIndex.map {
+        case ((a, b), i) => if (i % 2 == 0) (b, a) else (a, b) } :+ ((b0, b0))
+      val messy = PropertyGraph(graphOf(edges).vertices.filter(col("id") =!= a0),
+        messyEdges.toDF("src", "dst"))
+      val pairs = edges.distinct.sorted
+      assert(messy.canonicalEdges.as[(Long, Long)].collect().sorted.toSeq == pairs,
+        s"seed $seed")
+      val madj = messy.adjacency.as[(Long, Long)].collect()
+      assert(madj.length == 2 * pairs.length && madj.distinct.length == madj.length,
+        s"seed $seed")
+      val degree = pairs.flatMap { case (a, b) => Seq(a, b) }
+        .groupBy(identity).map { case (v, vs) => v -> vs.length.toLong }
+      assert(messy.degrees.as[(Long, Long)].collect().toMap == degree, s"seed $seed")
     }
   }
 

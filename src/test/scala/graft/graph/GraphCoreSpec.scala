@@ -18,13 +18,23 @@ class GraphCoreSpec extends SparkSpec {
       Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst"))
   }
 
-  test("symmetrized doubles the edges and is an involution on the edge set") {
-    assert(g.symmetrized.count() == 8)
-    val twice = g.symmetrized
-      .select(col("dst").as("src"), col("src").as("dst"))
-      .union(g.symmetrized)
-      .distinct()
-    assert(twice.count() == g.adjacency.count())
+  test("canonicalEdges and adjacency on messy input: each pair once, both ways") {
+    import spark.implicits._
+    assert(g.adjacency.count() == 8)
+    val reversed = g.adjacency.select(col("dst").as("src"), col("src").as("dst"))
+    assert(reversed.union(g.adjacency).distinct().count() == 8)
+    // The same triangle and tail written messily: reversed duplicates,
+    // a repeated row, a self-loop, and an edge to 6, which has no vertex row.
+    val messy = PropertyGraph(g.vertices,
+      Seq((1L, 2L), (2L, 1L), (3L, 2L), (1L, 3L), (1L, 3L), (4L, 3L), (3L, 4L),
+        (2L, 2L), (6L, 4L)).toDF("src", "dst"))
+    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 6L))
+    assert(messy.canonicalEdges.as[(Long, Long)].collect().sorted.toSeq == pairs)
+    val adj = messy.adjacency.as[(Long, Long)].collect()
+    assert(adj.length == adj.distinct.length)
+    assert(adj.toSet == (pairs ++ pairs.map(_.swap)).toSet)
+    val d = messy.degrees.as[(Long, Long)].collect().toMap
+    assert(d == Map(1L -> 2L, 2L -> 2L, 3L -> 3L, 4L -> 2L, 6L -> 1L))
   }
 
   test("degrees") {
@@ -144,6 +154,42 @@ class GraphCoreSpec extends SparkSpec {
     assert(HgnPipeline.edgesToDelete(weights, btw, 0.5, 3.0).count() == 0)
   }
 
+  test("edgesToDelete: one pair-keyed join equals the two-orientation join at maxLen 3") {
+    import spark.implicits._
+    implicit val s = spark
+    // A 6-cycle 1-2-5-6-4-3-1: each vertex's opposite is reached by two
+    // tied 3-hop paths, and the smallest forward mid sequence differs by
+    // direction (1->6 goes 2,5; 6->1 goes 4,3), so betweenness is not
+    // orientation-symmetric here.
+    val cyc = PropertyGraph(Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("id"),
+      Seq((1L, 2L), (2L, 5L), (5L, 6L), (6L, 4L), (4L, 3L), (3L, 1L)).toDF("src", "dst"))
+    val btw = Betweenness.run(cyc, 3)
+    val b = btw.select(col("edges.src"), col("edges.dst"), col("betweenness"))
+      .as[(Long, Long, Long)].collect()
+      .map { case (u, v, n) => (u, v) -> n }.toMap
+    assert(b.exists { case ((u, v), n) => b((v, u)) != n })
+    // Both orientations of weight rows, weights on both sides of maxW,
+    // a duplicate row and a self-loop.
+    val weights = Seq((1L, 2L, 0.9), (5L, 2L, 0.9), (5L, 6L, 0.2), (4L, 6L, 0.9),
+      (3L, 4L, 0.9), (3L, 4L, 0.9), (1L, 3L, 0.6), (2L, 2L, 0.1))
+      .toDF("src", "dst", "edge_weight")
+    def twoWay(thres: Double) = {
+      val fwd = weights.join(btw, weights("src") === btw("edges.src") &&
+        weights("dst") === btw("edges.dst"))
+      val rev = weights.join(btw, weights("src") === btw("edges.dst") &&
+        weights("dst") === btw("edges.src"))
+      fwd.union(rev)
+        .filter(col("edge_weight") < 0.5 ||
+          (col("edge_weight") >= 0.5 && col("betweenness") > thres))
+        .select("src", "dst").as[(Long, Long)].collect().sorted.toSeq
+    }
+    for (thres <- b.values.toSeq.distinct.sorted.map(_ - 0.5) :+ 100.0) {
+      val one = HgnPipeline.edgesToDelete(weights, btw, 0.5, thres)
+        .as[(Long, Long)].collect().sorted.toSeq
+      assert(one == twoWay(thres), s"betweenness threshold $thres")
+    }
+  }
+
   test("deleteEdges: anti-join removal + keepit re-add + isolated drop") {
     import spark.implicits._
     val edgesR = RMetrics.run(g, 0.45, 0.9)
@@ -152,6 +198,27 @@ class GraphCoreSpec extends SparkSpec {
     assert(next.vertices.select("id").collect().map(_.getLong(0)).toSet
       == Set(1L, 2L, 3L))
     assert(next.edges.select("src", "dst").distinct().count() == 3)
+  }
+
+  test("iterate: the keepit re-add never restores an edge selected for deletion") {
+    import spark.implicits._
+    implicit val s = spark
+    val sims = Seq((1L, 2L, 0.8), (2L, 3L, 0.1), (1L, 3L, 0.1), (3L, 4L, 0.9))
+      .toDF("src", "dst", "similarity")
+    val p = HgnParams(featureMinAvg = 0.5, rLvl1Thres = 0.45, rLvl2Thres = 0.9,
+      maxEdgeWeight = 0.5, betweennessThres = 2.0)
+    val btw = Betweenness.run(g, 2)
+    val toDelete = HgnPipeline.edgesToDelete(
+      EdgeWeights.run(RMetrics.run(g, p.rLvl1Thres, p.rLvl2Thres), sims, p.featureMinAvg),
+      btw, p.maxEdgeWeight, p.betweennessThres).as[(Long, Long)].collect().toSet
+    assert(toDelete == Set((3L, 4L)))
+    val (next, n) = HgnPipeline.iterate(g, sims, btw, p)
+    assert(n == 2) // (3,4) matched through both betweenness orientations
+    val expected = g.edges.as[(Long, Long)].collect().toSet
+      .filterNot(e => toDelete(e) || toDelete(e.swap))
+    // The re-add duplicates kept triangle edges but restores nothing.
+    assert(next.edges.count() > expected.size)
+    assert(next.edges.as[(Long, Long)].collect().toSet == expected)
   }
 
   test("connected components and small-community filter") {
