@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   *
   *   - The reference collected ALL vertex ids to the driver as landmarks
   *     (`main.py:254`) and ran batched Pregel `shortestPaths` — O(V) driver
-  *     memory, fatal at scale (SURVEY §7.5.3). Here distances are a
-  *     landmark-free bounded BFS: `maxLen` self-joins of the adjacency
-  *     DataFrame, entirely distributed.
+  *     memory, fatal at scale (SURVEY §7.5.3). Here there is no
+  *     separate distance relation: the path chain below is itself a
+  *     landmark-free bounded BFS, `maxLen - 1` self-joins of the
+  *     adjacency DataFrame, entirely distributed.
   *   - Motif enumeration (`g.find("(a)-[e0]->(n0);...")`,
   *     `graph_tools/graph_tools.py:162-181, 220-232`) becomes a join chain
   *     over the symmetrized edges; the path is carried as ONE
@@ -19,8 +20,9 @@ import org.apache.spark.sql.functions._
   *     wide columns, which deletes the pad-missing-columns operator
   *     (`spark_manager/spark_manager.py:411-453`, SURVEY §7.1) and turns
   *     betweenness into `explode + groupBy struct`.
-  *   - Paths are pruned to shortest length by an inner join against the
-  *     distance table (J4, `graph_tools/graph_tools.py:202-210`).
+  *   - Paths are pruned to shortest length (J4,
+  *     `graph_tools/graph_tools.py:202-210`) by an anti-join against
+  *     the pairs reached at a shorter level.
   *   - ONE path per ordered endpoint pair is kept, as in the reference's
   *     `dropDuplicates(["a","z"])` (`graph_tools/graph_tools.py:208`) —
   *     but where the reference kept an ARBITRARY survivor, we keep the
@@ -44,87 +46,29 @@ import org.apache.spark.sql.functions._
   *
   * Hub-skew: all intermediate expansion joins take the `maxMidDegree`-
   * capped adjacency ([[Skew.cappedMidAdjacency]]) — with a cap, paths
-  * THROUGH hubs above it are excluded from both the distance table and
-  * path enumeration (consistently, so no pair is assigned a path longer
-  * than its capped distance). `None` is bit-identical to exact.
+  * THROUGH hubs above it are excluded, and a pair's distance is its
+  * capped distance. `None` is bit-identical to exact.
   */
 object Betweenness {
 
-  /** Ordered-pair shortest distances up to `maxLen` hops:
-    * `(a, z, distance)`, distance in 1..maxLen, a != z. Landmark-free BFS:
-    * each round extends the frontier by one adjacency join and anti-joins
-    * out pairs already seen at a shorter distance.
-    */
-  def boundedDistances(adj: DataFrame, maxLen: Int,
-      maxMidDegree: Option[Long] = None): DataFrame = {
-    require(maxLen >= 1, s"maxLen must be >= 1, got $maxLen")
-    // Extension steps go THROUGH the frontier's endpoint, so they use the
-    // capped adjacency; the first hop (direct edges) is never capped.
-    val midAdj = Skew.cappedMidAdjacency(adj, maxMidDegree)
-    var known = adj.select(col("src").as("a"), col("dst").as("z"))
-      .withColumn("distance", lit(1))
-    var frontier = known
-    // Round d's plan reads `known` twice (anti-join + union), so the
-    // uncut BFS recomputes earlier rounds a constant number of times
-    // at small maxLen. MEASURED (sf0.1, maxLen=3): a Lineage.cut per
-    // round costs MORE than the recompute it saves (distances 4.7 →
-    // 6.5 s, full chain 13.0 → 19.3 s) — eager block-store
-    // materialization of multi-million-row rounds loses to replaying
-    // codegen'd joins on 32 cores. Keep the BFS a pure expression.
-    for (d <- 2 to maxLen) {
-      val extended = frontier
-        .select(col("a"), col("z").as("mid"))
-        .join(midAdj.select(col("src").as("mid"), col("dst").as("z")), Seq("mid"))
-        .select(col("a"), col("z"))
-        .filter(col("a") =!= col("z"))
-        .distinct()
-      frontier = extended.join(known.select("a", "z"), Seq("a", "z"), "left_anti")
-        .withColumn("distance", lit(d))
-      known = known.unionByName(frontier)
-    }
-    known
-  }
-
-  /** All walks of exactly `len` hops over `adj` as
-    * `(a, z, mids: array<bigint>, path: array<struct<src,dst>>)` with
-    * `a != z`. Non-simple walks are later eliminated by the
-    * shortest-distance join (a walk revisiting a vertex cannot achieve the
-    * shortest length). Fan-out is degree^len — callers keep `len` small
-    * (the reference default `max_sp_length` is 2, `confs/quakers.yml:64`).
-    */
-  /** Length-1 walks: every directed edge as `(a, z, mids)`. */
-  private def walkSeeds(adj: DataFrame): DataFrame =
-    adj.select(
-      col("src").as("a"), col("dst").as("z"),
-      array().cast("array<bigint>").as("mids"))
-
-  /** One motif-join extension hop: walks `(a, z, mids)` × the capped
-    * mid-adjacency — the join-chain statement of the reference's
-    * `g.find("(a)-[e0]->(n0);…")` motif step.
-    */
-  private def extendWalks(p: DataFrame, midAdj: DataFrame): DataFrame =
-    p.select(col("a"), col("z").as("mid"), col("mids"))
-      .join(midAdj.select(col("src").as("mid"), col("dst").as("z")), Seq("mid"))
-      .select(col("a"), col("z"),
-        concat(col("mids"), array(col("mid"))).as("mids"))
-
-  /** [[walkSeeds]]/[[extendWalks]] twins for the shortest-path chain:
-    * a walk is FULLY determined by its endpoints plus intermediate
-    * sequence, so these carry the zero-padded tie-break KEY STRING
-    * (",<width-digit mid>" per hop — all comparisons stay element-wise
-    * numeric order, every group's keys share one shape) instead of an
-    * edge-struct path array: every expression in the extension and the
-    * survivor aggregate is a scalar builtin (concat/lpad/min), nothing
-    * drops out of whole-stage codegen or the hash-aggregate path, and
-    * the shuffles move one string per walk. The pad width is the DIGIT
-    * COUNT OF THE LARGEST VERTEX ID (round 20; was a fixed 19): any
-    * fixed width ≥ that yields the identical element-wise numeric order
-    * and hence the identical winner, while the candidate relation — the
-    * chain's biggest shuffle — and every min() comparison shrink ~3x
-    * (7-digit ids: 8 vs 20 bytes per hop). One scalar action derives
-    * the width; non-negative ids are asserted (a negative id's "-"
-    * would not zero-pad into numeric order — the old fixed width
-    * silently mis-ordered them too). The path array is parsed back out
+  /** Walk seeds and one motif-join extension hop (the join-chain
+    * statement of the reference's `g.find("(a)-[e0]->(n0);…")` motif
+    * step). A walk is FULLY determined by its endpoints plus
+    * intermediate sequence, so these carry the zero-padded tie-break
+    * KEY STRING (",<width-digit mid>" per hop — all comparisons stay
+    * element-wise numeric order, every group's keys share one shape)
+    * instead of an edge-struct path array: every expression in the
+    * extension and the survivor aggregate is a scalar builtin
+    * (concat/lpad/min), nothing drops out of whole-stage codegen or the
+    * hash-aggregate path, and the shuffles move one string per walk.
+    * The pad width is the DIGIT COUNT OF THE LARGEST VERTEX ID (round
+    * 20; was a fixed 19): any fixed width ≥ that yields the identical
+    * element-wise numeric order and hence the identical winner, while
+    * the candidate relation — the chain's biggest shuffle — and every
+    * min() comparison shrink ~3x (7-digit ids: 8 vs 20 bytes per hop).
+    * One scalar action derives the width; non-negative ids are asserted
+    * (a negative id's "-" would not zero-pad into numeric order — the
+    * old fixed width silently mis-ordered them too). The path array is parsed back out
     * of the winning key once per surviving pair ([[pathFromKey]]).
     */
   private def keyedSeeds(adj: DataFrame): DataFrame =
@@ -155,80 +99,44 @@ object Betweenness {
     }
   }
 
-  /** The `array<struct<src,dst>>` edge path of the walk
-    * `a → mids… → z`, reconstructed from the vertex sequence as a
-    * static CASE over the (bounded, known) intermediate count — plain
-    * CreateArray/CreateNamedStruct/GetArrayItem expressions that stay
-    * inside whole-stage codegen, where a `zip_with`/`slice` HOF
-    * composite would evaluate interpreted per row (measured 2.3x on
-    * the sf0.1 k=3 chain).
-    */
-  private def pathOf(a: org.apache.spark.sql.Column,
-      mids: org.apache.spark.sql.Column,
-      z: org.apache.spark.sql.Column, maxLen: Int)
-      : org.apache.spark.sql.Column = {
-    def arm(k: Int): org.apache.spark.sql.Column = {
-      val verts = (a +: (0 until k).map(i => mids.getItem(i))) :+ z
-      array(verts.sliding(2).map(p =>
-        struct(p(0).as("src"), p(1).as("dst"))).toSeq: _*)
-    }
-    (0 until maxLen - 1).foldRight(arm(maxLen - 1)) { (k, rest) =>
-      when(size(mids) === k, arm(k)).otherwise(rest)
-    }
-  }
-
-  def enumeratePaths(adj: DataFrame, len: Int,
-      maxMidDegree: Option[Long] = None): DataFrame = {
-    require(len >= 1, s"len must be >= 1, got $len")
-    val midAdj = Skew.cappedMidAdjacency(adj, maxMidDegree)
-    var p = walkSeeds(adj)
-    for (_ <- 2 to len) p = extendWalks(p, midAdj)
-    p.filter(col("a") =!= col("z"))
-      .withColumn("path", pathOf(col("a"), col("mids"), col("z"), len))
-  }
-
   /** The pruned candidate union: all tied shortest paths per ordered
-    * pair at distance ≤ `maxLen`, keyed for the tie-break.
+    * pair at distance ≤ `maxLen`, keyed for the tie-break — one level
+    * chain that carries its own distances.
     *
-    * Shortest-PREFIX frontier pruning (round-18 VERDICT ask #3): every
-    * prefix of a shortest path is itself a shortest path between its
-    * endpoints — a length-`d` walk whose endpoints sit at distance `d`
-    * cannot pass through a prefix pair `(a, m_k)` at distance < `k`,
+    * Level `d` extends level `d-1` by one hop and drops the walks whose
+    * pair `(a, z)` was reached at a shorter level (or is `a == z`).
+    * Every prefix of a shortest path is itself a shortest path between
+    * its endpoints — a length-`d` walk whose endpoints sit at distance
+    * `d` cannot pass through a prefix pair `(a, m_k)` at distance < `k`,
     * or splicing the shorter prefix route onto the suffix would beat
     * `d` (the splice stays inside the capped walk algebra: first hop
     * uncapped, extensions through the capped mid-adjacency, so the
-    * argument holds verbatim under a hub cap). Each level is therefore
-    * semi-joined to its EXACT-distance pair set before the next
-    * extension, so level `d`'s motif join fans out from the shortest
+    * argument holds verbatim under a hub cap). So extending only the
+    * shortest `d-1`-paths reaches every shortest `d`-path; a walk whose
+    * pair no shorter level reached is at distance exactly `d`; and a
+    * walk that revisits a vertex ends on a pair already reached or on
+    * `a == z`. Level `d`'s motif join fans out from the shortest
     * `d-1`-paths only — |pairs at distance d-1| × tie multiplicity ×
-    * cap — instead of re-enumerating all `Σdeg·cap^(d-2)` raw walks
-    * per length the way the pre-round-19 per-length enumeration did.
-    * The surviving candidate set per pair is IDENTICAL (all tied
-    * shortest paths survive pruning), so the lexicographic-min
-    * tie-break — and the oracle replay — are unchanged.
+    * cap — and each pair keeps ALL its tied shortest paths, so the
+    * lexicographic-min tie-break — and the oracle replay — see the
+    * complete candidate set.
     */
   private def shortestPathCandidates(g: PropertyGraph, maxLen: Int,
       maxMidDegree: Option[Long], width: Int): DataFrame = {
     val adj = g.adjacency
-    // The distance relation is consumed by maxLen-1 semi-joins and is
-    // itself an iterated-join plan — but do NOT Lineage.cut it:
-    // measured at sf0.1 k=3, the eager materialization costs ~4.7 s
-    // while letting each semi-join replay the BFS costs ~nothing
-    // extra (12.7 -> 8.1 s full-chain after dropping the cut; same
-    // result as the per-round and per-level cut experiments below).
-    val dist = boundedDistances(adj, maxLen, maxMidDegree)
     val midAdj = Skew.cappedMidAdjacency(adj, maxMidDegree)
     // Level 1: direct non-loop edges are exactly the distance-1 pairs.
     var level = keyedSeeds(adj).filter(col("a") =!= col("z"))
     var candidates = level
-    for (d <- 2 to maxLen) {
+    for (_ <- 2 to maxLen) {
       level = extendKeyed(level, midAdj, width)
-        .join(dist.filter(col("distance") === d).select("a", "z"),
-          Seq("a", "z"), "left_semi")
+        .filter(col("a") =!= col("z"))
+        .join(candidates.select("a", "z"), Seq("a", "z"), "left_anti")
       // Level d feeds both the candidate union and level d+1's
-      // extension; cutting it here was MEASURED SLOWER (sf0.1 k=3:
-      // 13.0 -> 19.3 s) — same materialization-vs-recompute loss as
-      // the boundedDistances note.
+      // extension; cutting it here was MEASURED SLOWER (sf0.1 k=3,
+      // on the former BFS-plus-paths chain: 13.0 -> 19.3 s): eager
+      // block-store materialization of multi-million-row levels loses
+      // to replaying codegen'd joins.
       candidates = candidates.unionByName(level)
     }
     candidates
@@ -244,6 +152,7 @@ object Betweenness {
     */
   def shortestPaths(g: PropertyGraph, maxLen: Int,
       maxMidDegree: Option[Long] = None): DataFrame = {
+    require(maxLen >= 1, s"maxLen must be >= 1, got $maxLen")
     val width = keyWidth(g.adjacency)
     val candidates = shortestPathCandidates(g, maxLen, maxMidDegree, width)
     // Deterministic survivor: lexicographically smallest intermediate

@@ -28,30 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Salted equi-join for a skewed key distribution that AQE's skew
-    * splitting can't fix (e.g. the skewed side must first aggregate, or
-    * the planner chose a shuffled-hash path): each left row gets a
-    * deterministic content-derived salt in `[0, salts)` and the right
-    * side is replicated `salts` ways, so the join key becomes
-    * `(key, salt)` — a hot key's rows spread over `salts` shuffle
-    * partitions at the cost of replicating the (small, but not
-    * broadcastable) right side. Inner-join semantics and multiplicities
-    * are identical to `left.join(right, key)` (each right row matches a
-    * given left row under exactly one salt value — differential-tested
-    * in SkewSpec).
-    */
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-      salts: Int): DataFrame = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    require(!left.columns.contains("__salt") && !right.columns.contains("__salt"),
-      "saltedJoin reserves the __salt column name; rename it in the inputs")
-    val sl = left.withColumn("__salt",
-      pmod(xxhash64(left.columns.toIndexedSeq.map(col): _*), lit(salts.toLong)).cast("int"))
-    val sr = right.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    sl.join(sr, Seq(key, "__salt")).drop("__salt")
-  }
-
   /** The adjacency rows usable for expansion THROUGH their `src`: rows
     * whose `src` has degree ≤ `maxMidDegree`. Degree is counted over the
     * full symmetrized adjacency (undirected degree). One extra

@@ -268,11 +268,12 @@ object GraphQueries {
     * [[graft.graph.Skew.cappedMidAdjacency]] semantics), distances and
     * walks extend through `cm` only, every length's pairs join their
     * exact-distance set, and the survivor per ordered pair is the
-    * lexicographically smallest zero-padded intermediate sequence —
-    * [[graft.graph.Betweenness.shortestPaths]] replayed term for term.
-    * Degenerate walks (revisiting an endpoint) need no explicit filter:
-    * their endpoints are always at a shorter distance, so the
-    * exact-distance join drops them — same argument as the engine's.
+    * lexicographically smallest zero-padded intermediate sequence. The
+    * engine ([[graft.graph.Betweenness.shortestPaths]]) has no distance
+    * table; its anti-join against pairs reached at a shorter level
+    * yields the same candidate set. Degenerate walks (revisiting an
+    * endpoint) need no explicit filter: their endpoints are always at a
+    * shorter distance, so the exact-distance join drops them.
     */
   private val BTW3 = s"""
     |cm AS (

@@ -95,7 +95,8 @@ class PropertiesSpec extends SparkSpec {
 
   test("property: distances respect the hop bound, exclude self-pairs") {
     for (seed <- seeds; edges = sampleEdges(seed) if edges.nonEmpty) {
-      val d = Betweenness.boundedDistances(graphOf(edges).adjacency, 2)
+      val d = Betweenness.shortestPaths(graphOf(edges), 2)
+        .withColumn("distance", size(col("path")))
       assert(d.filter(col("distance") > 2 || col("distance") < 1).count() == 0)
       assert(d.filter(col("a") === col("z")).count() == 0)
     }
@@ -151,6 +152,57 @@ class PropertiesSpec extends SparkSpec {
     assert(b((2L, 3L)) == 1 + 2 + 1) // d1 + d2(1,3)+(2,4) + d3(1,4)
     assert(b((3L, 4L)) == 1 + 1 + 1)
     assert(b((2L, 1L)) == 3 && b((3L, 2L)) == 4 && b((4L, 3L)) == 3)
+  }
+
+  /** Plain-Scala betweenness: BFS distances over an adjacency `Map`,
+    * then every walk of exactly that length under the capped-walk rules
+    * (the first hop is free; later hops leave only vertices of degree
+    * ≤ cap). Per ordered pair the walk with the smallest mid sequence
+    * wins; each winner counts once on every directed edge it uses.
+    */
+  private def oracleBetweenness(edges: List[(Long, Long)], maxLen: Int,
+      cap: Option[Long]): Set[(Long, Long, Long)] = {
+    val adj: Map[Long, Seq[Long]] = edges
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
+      .groupMap(_._1)(_._2)
+    def next(v: Long, firstHop: Boolean): Seq[Long] =
+      if (firstHop || cap.forall(adj(v).size <= _)) adj(v) else Nil
+    val midOrder = Ordering.Implicits.seqOrdering[Vector, Long]
+    val winners = adj.keys.toSeq.flatMap { a =>
+      var dist = Map(a -> 0)
+      var frontier = Seq(a)
+      for (d <- 1 to maxLen) {
+        frontier = frontier.flatMap(next(_, d == 1)).distinct.filterNot(dist.contains)
+        dist ++= frontier.map(_ -> d)
+      }
+      def walks(w: Vector[Long]): Seq[Vector[Long]] =
+        if (w.size > maxLen) Seq(w)
+        else w +: next(w.last, w.size == 1).flatMap(v => walks(w :+ v))
+      walks(Vector(a))
+        .filter(w => w.last != a && dist.get(w.last).contains(w.size - 1))
+        .groupBy(_.last).values
+        .map(_.minBy(w => w.slice(1, w.size - 1))(midOrder))
+    }
+    winners.flatMap(_.sliding(2).map(e => (e(0), e(1))))
+      .groupBy(identity).map { case ((s, d), n) => (s, d, n.size.toLong) }.toSet
+  }
+
+  test("property: betweenness equals a plain-Scala BFS oracle, exact and hub-capped") {
+    import spark.implicits._
+    implicit val s = spark
+    var capBinds = false
+    for (seed <- seeds; edges = sampleEdges(seed) if edges.nonEmpty;
+         maxLen <- Seq(2, 3); cap <- Seq(None, Some(2L))) {
+      val degree = edges.distinct.flatMap { case (a, b) => Seq(a, b) }
+        .groupBy(identity).map(_._2.size)
+      capBinds ||= cap.exists(c => degree.exists(_ > c))
+      val engine = Betweenness.run(graphOf(edges), maxLen, cap)
+        .select(col("edges.src"), col("edges.dst"), col("betweenness"))
+        .as[(Long, Long, Long)].collect().toSet
+      assert(engine == oracleBetweenness(edges, maxLen, cap),
+        s"seed $seed maxLen $maxLen cap $cap")
+    }
+    assert(capBinds, "the cap never excluded a vertex")
   }
 
   test("property: two-phase sequence packing equals the single window") {

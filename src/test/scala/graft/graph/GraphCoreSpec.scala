@@ -96,7 +96,8 @@ class GraphCoreSpec extends SparkSpec {
   }
 
   test("bounded distances") {
-    val d = Betweenness.boundedDistances(g.adjacency, 2).collect()
+    val d = Betweenness.shortestPaths(g, 2)
+      .select(col("a"), col("z"), size(col("path"))).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     assert(d((1L, 2L)) == 1 && d((3L, 4L)) == 1)
     assert(d((1L, 4L)) == 2 && d((4L, 2L)) == 2)
@@ -118,7 +119,7 @@ class GraphCoreSpec extends SparkSpec {
     assert(b.size == 8)
   }
 
-  test("betweenness rejects negative vertex ids") {
+  test("betweenness rejects negative vertex ids and maxLen < 1") {
     import spark.implicits._
     implicit val s = spark
     val neg = PropertyGraph(Seq(-1L, 2L, 3L).toDF("id"),
@@ -127,6 +128,10 @@ class GraphCoreSpec extends SparkSpec {
       Betweenness.run(neg, 2)
     }
     assert(ex.getMessage.contains("non-negative vertex ids"))
+    val zero = intercept[IllegalArgumentException] {
+      Betweenness.run(g, 0)
+    }
+    assert(zero.getMessage.contains("maxLen must be >= 1"))
   }
 
   test("edge weights over the deletable edge's common neighborhood") {
