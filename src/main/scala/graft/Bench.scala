@@ -3,54 +3,26 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every catalog query against
-  * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * `SPARK_GRAFT_SF_DIR` and prints the artifact line
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`,
+  * then a compact summary of it as the last stdout line.
   *
-  * Measurement integrity (VERDICT rounds 1-2, 6):
-  *   - one warmup execution per query (JIT/codegen/parquet footer caches
-  *     warm; the measured pass reflects steady-state plan cost, not
-  *     first-use overhead);
-  *   - each query is measured `RUNS` (3) times; the reported value is
-  *     the plain median of the MOST RECENT batch of samples (the
-  *     re-run batch when contention triggered one) — one consistent
-  *     definition for every query, never a best-of-pool median (ADVICE
-  *     round 7); per-query minima live in a sibling `min_queries`
-  *     object;
-  *   - CONTENTION-PROOFING (VERDICT round 6 "What's wrong" #1: the
-  *     committed round-6 artifact was recorded on a contended VM and
-  *     overstated several queries up to 5x): each query's fresh minimum
-  *     is compared against the best known minimum from all previously
-  *     committed `BENCH_r*.json` artifacts; a >1.5x regressor is re-run
-  *     for another `RUNS` samples and the extra samples pooled, so one
-  *     bad VM slice cannot be committed as the round's capability. The
-  *     JSON gains `"contended"` (true when a re-run recovered >1.5x or a
-  *     query's median sits >1.5x over its own min AFTER the stability
-  *     re-runs), a `"contention"` object naming the confirmed/unstable
-  *     queries, a `"reruns"` object with first-min vs final-min deltas,
-  *     and a `"stability_reruns"` object counting extra batches — so a
-  *     reader diffing rounds sees the VM's mood explicitly instead of
-  *     inferring it. Every query whose batch median exceeds 1.5x its
-  *     pooled min is re-sampled up to [[MaxStabilityReruns]] batches
-  *     (VERDICT round 9 #1 — round 9 committed medians 2-5x their own
-  *     same-run mins with only a flag);
-  *   - results are fully materialized via a `noop`-style foreach write
-  *     (`count()` lets Catalyst prune the final projection for
-  *     scan-shaped queries);
-  *   - a query that throws is reported in an `errors` object and its slot
-  *     excluded from the total, never silently timed as a success;
-  *   - JSON numbers are formatted under Locale.ROOT (a comma-decimal
-  *     default locale would emit invalid JSON);
-  *   - the legacy-parquet session flag is set once at session build, not
-  *     inside the per-query loader.
+  * Each query runs once to warm up, then in batches of `RUNS` (3)
+  * samples, each fully materialised through the `noop` sink. Contention
+  * is judged inside the run: around each batch, other processes' CPU and
+  * hypervisor steal are read from `/proc` ([[hostLoad]]); a batch is
+  * disturbed when they average more than half a core over its wall time.
+  * Another batch is sampled, up to [[MaxStabilityReruns]] times, while
+  * the latest batch is disturbed or its median sits above 1.5x the
+  * pooled minimum (0.2 s floor) — see [[resample]]. The headline is the
+  * plain median of the last batch; the run is `contended` when some
+  * query's last batch is still disturbed or unstable. A host that is
+  * slower for the whole run, without steal or other processes' CPU,
+  * slows every batch alike and is not detected. A query that throws
+  * goes to `errors`, is left out of the total, and fails the run.
   */
 object Bench {
 
-  /** Cap on per-query stability re-run batches (VERDICT round 9 #1):
-    * a query whose batch median stays >1.5x its own pooled minimum is
-    * re-sampled up to this many extra batches before being committed —
-    * and if STILL >1.5x after all of them, it is flagged `unstable`
-    * (the committed artifact never hides a contended headline).
-    */
   val MaxStabilityReruns: Int = 4
 
   private def runOnce(spark: SparkSession,
@@ -59,133 +31,87 @@ object Bench {
     // Materialize every row and column without collecting to the driver.
     fn(spark, sfDir).write.mode("overwrite").format("noop").save()
 
-  /** Extract `name -> seconds` from a committed bench artifact. Robust
-    * to both shapes on disk: Bench's own raw JSON line, and the driver's
-    * wrapper whose `tail` field holds a quote-escaped suffix of stdout
-    * (the tail keeps the END of the line, so `min_queries` survives
-    * truncation; `queries` is the fallback for older artifacts). The
-    * objects are flat name:number maps, so first-`}` delimiting and a
-    * backslash-tolerant pair regex are exact enough.
+  /** Whole-machine busy and steal ticks, and this process's own CPU
+    * ticks (its utime + stime plus those of its reaped children), at one
+    * instant.
     */
-  private[graft] def parseArtifact(text: String): Map[String, Double] = {
-    def objOf(field: String): Option[String] = {
-      val m = ("\"" + field + "\\\\?\":\\{").r.findFirstMatchIn(text)
-      m.flatMap { mm =>
-        val end = text.indexOf('}', mm.end)
-        if (end < 0) None else Some(text.substring(mm.end, end))
-      }
-    }
-    val body = objOf("min_queries").orElse(objOf("queries")).getOrElse("")
-    """"([A-Za-z0-9_]+)\\?":([0-9]+\.?[0-9]*)""".r.findAllMatchIn(body)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  private[graft] final case class CpuTicks(busy: Long, steal: Long, self: Long)
+
+  /** CPU seconds other processes and the hypervisor took over `wallS`. */
+  private[graft] final case class HostLoad(otherCpuS: Double, stealS: Double,
+      wallS: Double) {
+    def disturbed: Boolean = (otherCpuS + stealS) / wallS > 0.5
   }
 
-  /** Per-query minima from the most recent UNCONTENDED `bench_last.json`
-    * in the git history — the builder's latest clean record measured on
-    * (near-)current implementations. Preferred over the historical
-    * `BENCH_r*.json` scan as the capability baseline, which fails both
-    * ways: early-round driver artifacts predate implementation changes
-    * (the round-3 artifact holds a 0.87 s g08 from a pre-DF-native
-    * connected components; round-5 a 0.15 s p20 from a pre-prefix-sum
-    * packing), so a minimum recorded on code that no longer exists
-    * permanently flags every honest future run `over_committed`; and
-    * the copy at HEAD can itself be a contended driver run (round 12's
-    * carries g05 at 9.4 s vs 3.1 s real) whose inflated minima would
-    * let sustained contention sail through unflagged. Walking the last
-    * few commits of bench_last.json and taking the newest one marked
-    * `"contended":false` for the SAME data dir bounds staleness at one
-    * round of implementation drift. Empty when git is unavailable or no
-    * clean matching artifact exists — callers fall back to the scan.
+  /** Parses the texts of `/proc/stat` and `/proc/self/stat`. */
+  private[graft] def parseTicks(procStat: String, selfStat: String): CpuTicks = {
+    // cpu user nice system idle iowait irq softirq steal ...
+    val f = procStat.linesIterator.next().trim.split("\\s+").drop(1).map(_.toLong)
+    // After the parenthesised command name, utime, stime, cutime and
+    // cstime are the 12th to 15th fields. The streaming queries fork
+    // short-lived child processes; without cutime + cstime their CPU
+    // reads as other processes' and marks the streaming batches
+    // disturbed on a quiet machine.
+    val rest = selfStat.substring(selfStat.lastIndexOf(')') + 2).split(" ")
+    CpuTicks(f(0) + f(1) + f(2) + f(5) + f(6), if (f.length > 7) f(7) else 0L,
+      rest.slice(11, 15).map(_.toLong).sum)
+  }
+
+  /** Other processes' CPU is the machine's busy time minus this
+    * process's; ticks are USER_HZ (100 per second on Linux).
     */
-  /** Normalized spelling of a data dir — the artifact's `sf` field and
-    * every baseline match go through this, so a trailing slash or a
-    * relative spelling of the same directory can't silently miss every
-    * committed artifact and drop the gating to the stale scan fallback
-    * (round-13 ADVICE).
+  private[graft] def hostLoad(from: CpuTicks, to: CpuTicks, wallS: Double): HostLoad = {
+    val self = (to.self - from.self) / 100.0
+    HostLoad(math.max(0.0, (to.busy - from.busy) / 100.0 - self),
+      (to.steal - from.steal) / 100.0, wallS)
+  }
+
+  /** None where `/proc` cannot be read: every batch then counts as
+    * undisturbed.
     */
+  private def readTicks(): Option[CpuTicks] = {
+    def read(path: String): String = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
+      java.nio.charset.StandardCharsets.UTF_8)
+    try Some(parseTicks(read("/proc/stat"), read("/proc/self/stat")))
+    catch { case _: Exception => None }
+  }
+
+  private def median(batch: Seq[Double]): Double = {
+    val s = batch.sorted; s(s.length / 2)
+  }
+
+  /** Whether a query needs another batch: its latest batch was
+    * disturbed, or that batch's median sits above 1.5x the pooled minimum
+    * by more than 0.2 s.
+    */
+  private[graft] def resample(batch: Seq[Double], pooledMin: Double,
+      disturbed: Boolean): Boolean =
+    disturbed || unstable(median(batch), pooledMin)
+
+  private def unstable(med: Double, pooledMin: Double): Boolean =
+    med > pooledMin * 1.5 && med - pooledMin > 0.2
+
+  /** Normalized spelling of a data dir for the artifact's `sf` field. */
   private[graft] def normSfDir(sfDir: String): String =
     try java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize.toString
     catch { case _: Exception => sfDir }
-
-  private[graft] def committedBenchLastMins(sfDir: String,
-      benchDir: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "."))
-      : Map[String, Double] =
-    try {
-      val sfKey = normSfDir(sfDir)
-      val quiet = scala.sys.process.ProcessLogger(_ => ())
-      val commits = scala.sys.process.Process(
-        Seq("git", "-C", benchDir, "log", "--format=%H", "-n", "10",
-          "--", "bench_last.json")).!!(quiet).linesIterator.toSeq
-      commits.iterator.flatMap { c =>
-        try {
-          val text = scala.sys.process.Process(
-            Seq("git", "-C", benchDir, "show", s"$c:bench_last.json")).!!(quiet)
-          if (text.contains(s""""sf":"$sfKey"""") &&
-              text.contains(""""contended":false"""))
-            Some(parseArtifact(text))
-          else None
-        } catch { case _: Exception => None }
-      }.nextOption().getOrElse(Map.empty)
-    } catch { case _: Exception => Map.empty[String, Double] }
-
-  /** Best known per-query minimum for the SAME data directory — a
-    * scale-bench run on a generated 10x dir must not compare against
-    * sf0.1 minimums and re-run every (legitimately slower) heavy query.
-    * Source of truth is [[committedBenchLastMins]] (current-code
-    * minima); the scan over every `BENCH_r*.json` in
-    * `SPARK_GRAFT_BENCH_DIR` (default: the working directory) is the
-    * fallback for checkouts without a committed bench_last. The raw
-    * JSON line ends with `"sf":"<dir>"`, which the driver wrapper's
-    * end-truncated `tail` always preserves (quote-escaped). Queries
-    * absent from the baseline (new this round) are never re-run.
-    * `SPARK_GRAFT_BENCH_BASELINE=none` disables.
-    */
-  private def bestKnownMins(sfDir: String,
-      committed: Map[String, Double]): Map[String, Double] = {
-    if (sys.env.get("SPARK_GRAFT_BENCH_BASELINE").contains("none"))
-      return Map.empty
-    if (committed.nonEmpty) return committed
-    val sfKey = normSfDir(sfDir)
-    val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "."))
-    val files = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-    files.iterator.flatMap { f =>
-      try {
-        val text = new String(
-          java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val sameSf = text.contains(s""""sf":"$sfKey"""") ||
-          text.contains(s"""\\"sf\\":\\"$sfKey\\"""")
-        if (sameSf) parseArtifact(text) else Map.empty[String, Double]
-      } catch { case _: Exception => Map.empty[String, Double] }
-    }.toSeq.groupMapReduce(_._1)(_._2)(math.min)
-  }
-
-  /** Queries whose final headline median exceeds 2x the best COMMITTED
-    * minimum for the same data dir (0.2 s absolute floor — sub-100ms
-    * queries must not thrash on fixed-overhead noise). The committed
-    * min is the one reference sustained whole-run contention cannot
-    * inflate; a query named here is carrying a number above the
-    * engine's demonstrated capability.
-    */
-  private[graft] def overCommittedNames(times: Map[String, Double],
-      prevMin: Map[String, Double]): Seq[String] =
-    times.keys.toSeq.sorted.filter { n =>
-      prevMin.get(n).exists(p => times(n) > p * 2.0 && times(n) - p > 0.2)
-    }
 
   /** Emit the artifact line on stdout AND to `SPARK_GRAFT_BENCH_OUT`
     * (VERDICT round 7 #8 / round 9 #7: the driver's log-tail capture of
     * a crashed run yielded `parsed: null` and cost a round of
     * diagnosis — every exit path must leave a parseable artifact).
     */
-  private def emit(jsonLine: String): Unit = {
+  private def emit(jsonLine: String): Option[String] = {
     println(jsonLine)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (jsonLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception =>
+    try {
+      java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+        (jsonLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Some(outFile)
+    } catch { case e: Exception =>
       System.err.println(s"[bench] warn: could not write $outFile: $e")
+      None
     }
   }
 
@@ -195,12 +121,14 @@ object Bench {
   def main(args: Array[String]): Unit =
     try realMain() catch {
       case e: Throwable =>
-        // A failure OUTSIDE the per-query loop (session build, tuning,
-        // artifact parsing) must still leave a JSON artifact, not just a
-        // stack trace in a truncated log tail.
+        // A failure OUTSIDE the per-query loop (a rejected setting,
+        // session build, tuning) must still leave a JSON artifact, not
+        // just a stack trace in a truncated log tail.
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         emit(s"""{"metric":"total","value":-1.000,"unit":"sec","queries":{},"fatal":"${
-          jsonSafe(Option(e.getMessage).getOrElse(e.getClass.getName))}","sf":"$sfDir"}""")
+          jsonSafe(msg)}","sf":"$sfDir"}""")
+        System.err.println(s"[bench] FAILURE: $msg")
         e.printStackTrace()
         sys.exit(1)
     }
@@ -208,6 +136,19 @@ object Bench {
   private def realMain(): Unit = {
     val sfDir = normSfDir(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be at least 1, got $runs")
+    // Optional subset (comma-separated names) — used by the scale bench
+    // to run only the heavy family against a generated 10x directory.
+    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // A typo'd subset name must fail loudly, not bench nothing and
+    // exit 0 (the round-4 regression-loudness principle).
+    val unknown = subset.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown SPARK_GRAFT_QUERIES name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => subset.forall(_.contains(n)))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Shuffle partitioning tracks DATA, not cores (measured: g05 at
     // ScaleUp factor 30 OOMs under cores-count partitioning) — derived
@@ -259,80 +200,42 @@ object Bench {
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("bench-ckpt").toString)
 
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // Optional subset (comma-separated names) — used by the scale bench
-    // to run only the heavy family against a generated 10x directory.
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // A typo'd subset name must fail loudly, not bench nothing and
-    // exit 0 (the round-4 regression-loudness principle).
-    val unknown = subset.getOrElse(Set.empty) -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) {
-      System.err.println(s"[bench] FAILURE: unknown SPARK_GRAFT_QUERIES " +
-        s"name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-      sys.exit(1)
-    }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => subset.forall(_.contains(n)))
-    // The committed clean bench_last is the only over_committed
-    // reference; the historical BENCH_r*.json scan (inside
-    // bestKnownMins) stays as a rerun-gating fallback ONLY — its
-    // early-round minima can come from since-replaced implementations,
-    // which must never permanently flag honest runs as contended
-    // (round-13 ADVICE).
-    val committedMins =
-      if (sys.env.get("SPARK_GRAFT_BENCH_BASELINE").contains("none"))
-        Map.empty[String, Double]
-      else committedBenchLastMins(sfDir)
-    val prevMin = bestKnownMins(sfDir, committedMins)
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
     val mins = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    val reruns = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     val stabilized = scala.collection.mutable.LinkedHashMap[String, Int]()
+    val disturbed = scala.collection.mutable.ArrayBuffer[String]()
+    val (runTicks, runWall) = (readTicks(), System.nanoTime())
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       try {
         runOnce(spark, fn, sfDir) // warmup
-        def sample(n: Int): Vector[Double] = (1 to n).toVector.map { _ =>
-          val t0 = System.nanoTime()
-          runOnce(spark, fn, sfDir)
-          (System.nanoTime() - t0) / 1e9
-        }
-        def med(b: Vector[Double]): Double = { val s = b.sorted; s(s.length / 2) }
-        var samples = sample(runs)
-        var lastBatch = samples
-        val firstMin = samples.min
-        // Re-run >1.5x regressors vs the best committed minimum (with a
-        // 0.2 s absolute floor so sub-100ms queries don't thrash on
-        // fixed overhead noise).
-        for (p <- prevMin.get(name))
-          if (firstMin > p * 1.5 && firstMin - p > 0.2) {
-            lastBatch = sample(runs)
-            samples = samples ++ lastBatch
-            reruns(name) = (firstMin, samples.min)
+        // One batch of `runs` samples, and whether other processes or
+        // steal disturbed it.
+        def batch(): (Vector[Double], Boolean) = {
+          val (t0, w0) = (readTicks(), System.nanoTime())
+          val b = (1 to runs).toVector.map { _ =>
+            val t = System.nanoTime()
+            runOnce(spark, fn, sfDir)
+            (System.nanoTime() - t) / 1e9
           }
-        // RE-RUN-TO-STABILITY (VERDICT round 9 #1: round 9 committed
-        // contention-inflated medians 2-5x over their own same-run mins,
-        // merely FLAGGING them unstable): while the latest batch's
-        // median sits >1.5x above the pooled minimum (0.2 s floor),
-        // sample another batch — a contended VM slice produces a
-        // headline only if the contention outlasts every retry, and
-        // then it is loudly 'unstable' below.
+          val load = for (a <- t0; z <- readTicks())
+            yield hostLoad(a, z, (System.nanoTime() - w0) / 1e9)
+          (b, load.exists(_.disturbed))
+        }
+        var (lastBatch, lastDisturbed) = batch()
+        var samples = lastBatch
         var extra = 0
         while (extra < MaxStabilityReruns &&
-            med(lastBatch) > samples.min * 1.5 &&
-            med(lastBatch) - samples.min > 0.2) {
-          lastBatch = sample(runs)
-          samples = samples ++ lastBatch
+            resample(lastBatch, samples.min, lastDisturbed)) {
+          val (b, d) = batch()
+          lastBatch = b; lastDisturbed = d
+          samples = samples ++ b
           extra += 1
         }
         if (extra > 0) stabilized(name) = extra
-        // ONE consistent headline definition (ADVICE round 7): the plain
-        // median of the most recent batch of `runs` samples — never a
-        // median over an asymmetric best-of pool. Best-case data lives
-        // in min_queries/reruns.
-        times(name) = med(lastBatch)
+        if (lastDisturbed) disturbed += name
+        times(name) = median(lastBatch)
         mins(name) = samples.min
       } catch {
         case e: Throwable =>
@@ -340,44 +243,10 @@ object Bench {
             .replaceAll("[\"\\n\\r\\t]", " ").take(200)
       }
     }
-    // Contention verdict: a re-run that recovered >1.5x confirms a bad
-    // VM slice; a median still >1.5x over the same session's own min
-    // (with the absolute floor) AFTER the stability re-runs means the
-    // contention outlasted every retry. Either way the artifact says so.
-    val confirmed = reruns.collect {
-      case (n, (first, fin)) if first > fin * 1.5 && first - fin > 0.2 => n
-    }.toSeq
-    val unstable = names.filter(n => (times.get(n), mins.get(n)) match {
-      case (Some(t), Some(m)) => t > m * 1.5 && t - m > 0.2
-      case _ => false
-    })
-    // SUSTAINED-contention flag (VERDICT round 12 #6): within-run
-    // policing compares a batch against the same session's own samples,
-    // so a VM slice contended for the WHOLE run sails through with
-    // every query uniformly 2-3x its real cost (round 12 committed g05
-    // at 9.4 s vs 3.1 s uncontended, flag-free except the driver's own
-    // self-report). The committed historical minimum is the one
-    // reference the contention can't inflate: any query whose FINAL
-    // headline median sits >2x above the best committed min for the
-    // same data dir (0.2 s floor) is named in `over_committed`, and the
-    // artifact is marked contended — a reader diffing rounds sees
-    // exactly which numbers exceed the engine's demonstrated capability
-    // instead of trusting a silently inflated headline.
-    val overCommitted = overCommittedNames(times.toMap, committedMins)
-    val contended = confirmed.nonEmpty || unstable.nonEmpty ||
-      overCommitted.nonEmpty
-    // Name the over-commit reference in the artifact (round-14 ADVICE):
-    // on checkouts without git or a matching clean committed
-    // bench_last, committedMins is empty and the over-commit check is
-    // silently disabled — a reader diffing rounds must see that.
-    // "committed" = active; "scan" = rerun gating only (BENCH_r* scan),
-    // over-commit OFF; "none"/"disabled" = no baseline at all.
-    val baselineSource =
-      if (sys.env.get("SPARK_GRAFT_BENCH_BASELINE").contains("none"))
-        "disabled"
-      else if (committedMins.nonEmpty) "committed"
-      else if (prevMin.nonEmpty) "scan"
-      else "none"
+    val host = for (a <- runTicks; z <- readTicks())
+      yield hostLoad(a, z, (System.nanoTime() - runWall) / 1e9)
+    val unstableNames = times.keys.toSeq.filter(n => unstable(times(n), mins(n)))
+    val contended = disturbed.nonEmpty || unstableNames.nonEmpty
     def jnum(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     def jmap(m: scala.collection.Map[String, Double]): String =
@@ -385,23 +254,21 @@ object Bench {
     def jarr(xs: Seq[String]): String =
       xs.map(x => s""""$x"""").mkString("[", ",", "]")
     val es = errors.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    val rr = reruns.map { case (k, (a, b)) =>
-      s""""$k":{"first_min":${jnum(a)},"final_min":${jnum(b)}}"""
-    }.mkString("{", ",", "}")
     val st = stabilized.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")
+    val hj = host.fold("null")(h =>
+      s"""{"other_cpu_s":${jnum(h.otherCpuS)},"steal_s":${jnum(h.stealS)}}""")
     val total = times.values.sum
-    val jsonLine = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${jmap(times)},"min_queries":${jmap(mins)},"contended":$contended,"contention":{"confirmed":${jarr(confirmed)},"unstable":${jarr(unstable)},"over_committed":${jarr(overCommitted)},"baseline_source":"$baselineSource"},"reruns":$rr,"stability_reruns":$st,"errors":$es,"sf":"$sfDir"}"""
-    emit(jsonLine)
+    val jsonLine = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${jmap(times)},"min_queries":${jmap(mins)},"contended":$contended,"contention":{"disturbed":${jarr(disturbed.toSeq)},"unstable":${jarr(unstableNames)}},"stability_reruns":$st,"host":$hj,"errors":$es,"sf":"$sfDir"}"""
+    val written = emit(jsonLine)
     // Tail-capture contract (round-19 VERDICT #2): the full artifact line
     // above grew to ~4 KB at 127 queries and has overflowed the driver's
     // 2000-char stdout-tail capture since round 14 (every BENCH_r*.json
     // since carries `parsed: null`). Print a COMPACT summary line as the
     // LAST stdout line — total/n/errors/contended fit any tail window —
     // so a tail-parser always finds one complete JSON object. The full
-    // per-query map stays in the line above and in bench_last.json
-    // (`emit` writes it); nothing about the measurement changed.
-    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${times.size},"errors":${errors.size},"contended":$contended,"queries_in":"bench_last.json","sf":"$sfDir"}""")
+    // per-query map stays in the line above and in the file `emit` wrote.
+    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${times.size},"errors":${errors.size},"contended":$contended,"queries_in":${written.fold("null")(w => s""""$w"""")},"sf":"$sfDir"}""")
     spark.stop()
     // Regression loudness (VERDICT round 4 #3): an erroring query must
     // fail the run, not just fill a JSON field nobody diffs. The JSON

@@ -2,70 +2,70 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Unit pins for Bench's measurement-integrity helpers (no Spark
-  * session — these are pure functions over artifact text / maps).
+/** Unit pins for Bench's in-run contention judgement (no Spark session,
+  * no `/proc` — these are pure functions over fixed texts and samples).
   */
 class BenchSpec extends AnyFunSuite {
 
-  test("parseArtifact reads both raw and driver-wrapped artifact shapes") {
-    val raw = """{"metric":"total","queries":{"q1":1.5,"g05":3.25},""" +
-      """"min_queries":{"q1":1.25,"g05":3.0},"sf":"/d"}"""
-    assert(Bench.parseArtifact(raw) == Map("q1" -> 1.25, "g05" -> 3.0))
-    // Driver wrapper: quote-escaped tail, min_queries preferred.
-    val wrapped = """{"n":12,"tail":"{\"queries\":{\"q1\":2.0},""" +
-      """\"min_queries\":{\"q1\":1.75},\"sf\":\"/d\"}"}"""
-    assert(Bench.parseArtifact(wrapped) == Map("q1" -> 1.75))
+  // cpu user nice system idle iowait irq softirq steal guest guest_nice
+  private def procStat(user: Long, steal: Long): String =
+    s"cpu  $user 50 300 9000 20 10 5 $steal 0 0\ncpu0 1 2 3 4 5 6 7 8 0 0\n"
+
+  // A command name holding ") " must not shift the utime/stime fields.
+  private def selfStat(utime: Long, stime: Long, cutime: Long = 0L,
+      cstime: Long = 0L): String =
+    s"4242 (java (x) y) S 1 4242 4242 0 -1 4194560 10 0 0 0 $utime $stime $cutime $cstime 20 0"
+
+  test("hostLoad: other = busy - self, never negative; steal is its own delta") {
+    val a = Bench.parseTicks(procStat(1000, 7), selfStat(40, 20))
+    assert(a == Bench.CpuTicks(1000 + 50 + 300 + 10 + 5, 7, 60))
+    // Busy grows by 150 ticks, of which this process took 100: 0.5 s other.
+    val b = Bench.parseTicks(procStat(1150, 27), selfStat(120, 40))
+    val load = Bench.hostLoad(a, b, wallS = 1.0)
+    assert(load.otherCpuS == 0.5)
+    assert(load.stealS == 0.2)
+    assert(load.disturbed)
+    // Self read after the machine-wide line: more self than busy is
+    // clamped to zero other CPU.
+    val c = Bench.parseTicks(procStat(1010, 7), selfStat(70, 20))
+    assert(Bench.hostLoad(a, c, 1.0).otherCpuS == 0.0)
+    // A kernel without the steal column reads as zero steal.
+    assert(Bench.parseTicks("cpu 1 2 3 4 5 6 7\n", selfStat(1, 1)).steal == 0L)
   }
 
-  test("overCommittedNames flags >2x-of-committed-min with a 0.2s floor") {
-    val prev = Map("g05" -> 3.0, "q_fast" -> 0.05, "q_ok" -> 1.0)
-    val times = Map(
-      "g05" -> 9.4, // the round-12 case: 3.1x committed min -> flagged
-      "q_fast" -> 0.15, // 3x but under the absolute floor -> not flagged
-      "q_ok" -> 1.9, // under 2x -> not flagged
-      "q_new" -> 50.0) // no committed baseline -> never flagged
-    assert(Bench.overCommittedNames(times, prev) == Seq("g05"))
-    // Boundary: exactly 2x is NOT flagged (strict inequality).
-    assert(Bench.overCommittedNames(Map("a" -> 2.0), Map("a" -> 1.0)).isEmpty)
+  test("hostLoad: reaped children's CPU counts as this process's own") {
+    val a = Bench.parseTicks(procStat(1000, 0), selfStat(40, 20, 30, 10))
+    assert(a.self == 40 + 20 + 30 + 10)
+    // Busy grows by 150 ticks: 100 in this process, 50 in its children.
+    val b = Bench.parseTicks(procStat(1150, 0), selfStat(120, 40, 60, 30))
+    val load = Bench.hostLoad(a, b, wallS = 1.0)
+    assert(load.otherCpuS == 0.0)
+    assert(!load.disturbed)
   }
 
-  test("committedBenchLastMins picks the newest UNCONTENDED committed bench_last") {
-    // Deterministic FIXTURE repo (round-13 ADVICE: the live-checkout
-    // formulation asserted repo state, not code — it failed on shallow
-    // clones, worktrees, or histories whose last 10 artifacts are all
-    // contended). Two commits: a clean artifact, then a newer CONTENDED
-    // one — the helper must skip the contended HEAD and return the
-    // older clean minima.
-    val repo = java.nio.file.Files.createTempDirectory("benchspec-git").toFile
-    def sh(cmd: String*): Unit =
-      assert(scala.sys.process.Process(cmd, repo).!(
-        scala.sys.process.ProcessLogger(_ => ())) == 0, cmd.mkString(" "))
-    def commit(text: String, msg: String): Unit = {
-      java.nio.file.Files.writeString(
-        new java.io.File(repo, "bench_last.json").toPath, text)
-      sh("git", "add", "-A"); sh("git", "commit", "-qm", msg)
-    }
-    sh("git", "init", "-q")
-    sh("git", "config", "user.email", "t@test")
-    sh("git", "config", "user.name", "t")
-    val sfKey = Bench.normSfDir("/root/testdata/sf0.1")
-    commit(s"""{"queries":{"g05_edge_weights":2.0},"min_queries":""" +
-      s"""{"g05_edge_weights":1.5},"contended":false,"sf":"$sfKey"}""", "clean")
-    commit(s"""{"queries":{"g05_edge_weights":9.4},"min_queries":""" +
-      s"""{"g05_edge_weights":9.0},"contended":true,"sf":"$sfKey"}""", "contended")
-    // Trailing-slash spelling of the same dir must still match (the
-    // normalization half of the same ADVICE round).
-    val mins = Bench.committedBenchLastMins("/root/testdata/sf0.1/",
-      repo.toString)
-    assert(mins == Map("g05_edge_weights" -> 1.5),
-      s"expected the older CLEAN artifact's minima, got $mins")
-    // A different data dir yields empty — scale runs never compare
-    // against sf0.1 minima.
-    assert(Bench.committedBenchLastMins("/tmp/no_such_sf_dir",
-      repo.toString).isEmpty)
-    // Best-effort secondary on the real checkout: when resolvable, the
-    // chosen artifact is positive-valued and uncontended by contract.
-    val real = Bench.committedBenchLastMins("/root/testdata/sf0.1")
-    assert(real.values.forall(_ > 0.0))
+  test("hostLoad: the 0.5-core disturbed boundary is strict") {
+    val a = Bench.parseTicks(procStat(1000, 0), selfStat(0, 0))
+    // 50 ticks of other CPU over 1 s: exactly half a core, not disturbed.
+    val half = Bench.parseTicks(procStat(1050, 0), selfStat(0, 0))
+    assert(!Bench.hostLoad(a, half, 1.0).disturbed)
+    assert(Bench.hostLoad(a, half, 0.99).disturbed)
+    assert(!Bench.HostLoad(0.25, 0.25, 1.0).disturbed)
+    assert(Bench.HostLoad(0.25, 0.26, 1.0).disturbed)
+    assert(Bench.HostLoad(0.0, 0.6, 1.0).disturbed)
+  }
+
+  test("resample: a disturbed batch re-samples; a stable quiet one does not") {
+    // Disturbed re-samples even at the pooled minimum.
+    assert(Bench.resample(Vector(1.0, 1.0, 1.0), 1.0, disturbed = true))
+    // Undisturbed and within 1.5x of the pooled min: done.
+    assert(!Bench.resample(Vector(1.4, 1.4, 1.4), 1.0, disturbed = false))
+    assert(!Bench.resample(Vector(1.5, 1.5, 1.5), 1.0, disturbed = false))
+    // Over 1.5x but within the 0.2 s floor: done.
+    assert(!Bench.resample(Vector(0.3, 0.3, 0.3), 0.15, disturbed = false))
+    // Over 1.5x and over the floor: re-sample.
+    assert(Bench.resample(Vector(1.6, 1.6, 1.6), 1.0, disturbed = false))
+    // The median decides: one slow sample alone does not re-sample.
+    assert(!Bench.resample(Vector(5.0, 1.0, 1.1), 1.0, disturbed = false))
+    assert(Bench.resample(Vector(5.0, 2.0, 1.0), 1.0, disturbed = false))
   }
 }

@@ -14,7 +14,7 @@ class EdgeWeightsEquivalenceSpec extends SparkSpec {
       sims: org.apache.spark.sql.DataFrame, tau: Double): Unit = {
     val fast = EdgeWeights.run(edgesR, sims, tau)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val ref = EdgeWeights.runReference(edgesR, sims, tau)
+    val ref = EdgeWeightsReference.runReference(edgesR, sims, tau)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(fast == ref)
   }
