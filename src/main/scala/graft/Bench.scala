@@ -149,12 +149,12 @@ object Bench {
       s"unknown SPARK_GRAFT_QUERIES name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => subset.forall(_.contains(n)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SessionTuning.cpus
     // Shuffle partitioning tracks DATA, not cores (measured: g05 at
     // ScaleUp factor 30 OOMs under cores-count partitioning) — derived
     // from the input directory's size by SessionTuning; the env var is
     // now an override, not a requirement.
-    val autoConfs = SessionTuning.autoConfs(sfDir, cpus.toInt)
+    val autoConfs = SessionTuning.autoConfs(sfDir, cpus)
     System.err.println(s"[bench] derived confs: ${autoConfs.map {
       case (k, v) => s"$k=$v" }.mkString(", ")} " +
       s"(input ${SessionTuning.dirBytes(sfDir) >> 20} MB, $cpus cores)")
@@ -178,14 +178,7 @@ object Bench {
       }
     extraConf.foreach { case (k, v) =>
       System.err.println(s"[bench] extra conf: $k=$v") }
-    val builder00 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-    val builder0 = autoConfs.foldLeft(builder00) {
-      case (b, (k, v)) => b.config(k, v) }
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder0) {
+    val spark = extraConf.foldLeft(SessionTuning.localBuilder(sfDir)) {
       case (b, (k, v)) => b.config(k, v) }
       // Shuffle files are only deleted when ContextCleaner sees their
       // plan get GC'd — and a large-heap driver may never GC across a

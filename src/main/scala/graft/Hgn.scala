@@ -24,11 +24,11 @@ object Hgn {
     */
   def session(appName: String = "hgn",
       extraConf: Map[String, String] = Map.empty): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SessionTuning.cpus
     val builder = SparkSession.builder()
       .appName(appName)
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
     val spark = extraConf.foldLeft(builder) {
       case (b, ("spark.master", v)) => b.master(v)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Data-derived session tuning — the round-7 scale lesson
   * ("partitions track DATA, not cores") promoted from a manual env knob
   * into engine policy.
@@ -106,5 +108,32 @@ object SessionTuning {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
           BytesPerShufflePartition.toString)
     else base
+  }
+
+  /** Cores of a local session: `SPARK_GRAFT_CPUS` when set, else every
+    * processor this JVM sees.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A `local[cpus]` session builder for a main reading `dataDir`: UTC
+    * session time zone, no UI, parquet nanos timestamps read as longs,
+    * and the [[autoConfs]] set.
+    */
+  def localBuilder(dataDir: String): SparkSession.Builder = {
+    val cores = cpus
+    autoConfs(dataDir, cores).foldLeft(SparkSession.builder()
+        .master(s"local[$cores]")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.ui.enabled", "false")) {
+      case (b, (k, v)) => b.config(k, v) }
+  }
+
+  /** The [[localBuilder]] session, logging at WARN. */
+  def localSession(dataDir: String): SparkSession = {
+    val spark = localBuilder(dataDir).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -38,19 +38,13 @@ import org.apache.spark.sql.functions._
 object EdgeWeights {
 
   /** `(src, dst, edge_weight)` for deletable edges with ≥1 qualifying
-    * similarity row. `edgesR` is [[RMetrics.edgesWithMetrics]] output;
-    * `similarities` is `(src, dst, similarity)` per original edge.
-    *
-    * Dispatches to the optimized plan ([[runFast]]); the
+    * similarity row. `edgesR` is [[RMetrics.run]] output;
+    * `similarities` is `(src, dst, similarity)` per original edge. The
     * reference-structural join chain lives in test scope
-    * (`EdgeWeightsReference`) and the two are differential-tested for
-    * equality (EdgeWeightsEquivalenceSpec) in addition to the DuckDB
-    * oracle gate on the fast path.
-    */
-  def run(edgesR: DataFrame, similarities: DataFrame, featureMinAvg: Double): DataFrame =
-    runFast(edgesR, similarities, featureMinAvg)
-
-  /** Optimized plan. Derivation from the reference's j_1/j_2/j_3:
+    * (`EdgeWeightsReference`), differential-tested against this plan
+    * (EdgeWeightsEquivalenceSpec) besides the DuckDB oracle gate.
+    *
+    * Derivation from the reference's j_1/j_2/j_3:
     *
     *   j_3 = {(e, s, d, sim) : s ∈ CN(e) ∧ d ∈ CN(e)}, then the weight is
     *   computed over DISTINCT sim VALUES per edge.
@@ -71,7 +65,7 @@ object EdgeWeights {
     * hash-partitionable equi-join, so the plan scales out like any
     * shuffle — no driver state, no cross product.
     */
-  private def runFast(edgesR: DataFrame, similarities: DataFrame,
+  def run(edgesR: DataFrame, similarities: DataFrame,
       featureMinAvg: Double): DataFrame = {
     val sims = similarities.select(
       col("src").as("s_src"), col("dst").as("s_dst"), col("similarity"))

@@ -42,12 +42,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * left-semi join of vertices against the union of edge endpoints
     * (SURVEY §2.3 J10).
     */
-  def dropIsolatedVertices: PropertyGraph = {
-    val endpoints = edges
-      .select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    PropertyGraph(vertices.join(endpoints, Seq("id"), "left_semi"), edges)
-  }
+  def dropIsolatedVertices: PropertyGraph =
+    PropertyGraph(
+      vertices.join(PropertyGraph.endpoints(edges), Seq("id"), "left_semi"), edges)
 
   /** Keep only the given vertices, and the edges with both endpoints kept
     * (the semi-join pair at `graph_tools/graph_tools.py:533-538`).
@@ -63,6 +60,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 }
 
 object PropertyGraph {
+
+  /** `(id)`: the distinct endpoints of `edges`, the vertex table of a
+    * graph known only by its edges.
+    */
+  def endpoints(edges: DataFrame): DataFrame =
+    edges.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
 
   /** `(src, dst)` with `src < dst`, one row per unordered pair of
     * `edges`; self-loops (and rows with a null endpoint) dropped.

@@ -39,57 +39,24 @@ object RMetrics {
   def ratio(common: Column, cnt: Column): Column =
     when(cnt > 0, common.cast("double") / cnt.cast("double")).otherwise(lit(0.0))
 
-  /** Attach one neighborhood level to both endpoints of each edge and emit
-    * the common-neighbor array + the two ratios. `nbs` is the output of
-    * [[Neighborhoods.neighbors]]; the two inner joins are the J2 shape
-    * (`graph_tools/graph_tools.py:406-423`). At scale, `nbs` shuffles on
-    * `id` and edges on `src`/`dst` — the same key, so the second join
-    * reuses the partitioning of the first's output side.
-    */
-  private def attachLevel(edges: DataFrame, nbs: DataFrame): DataFrame = {
-    val atSrc = nbs.select(
-      col("id").as("src"), col("count").as("count_src"), col("neighbors").as("nb_src"))
-    val atDst = nbs.select(
-      col("id").as("dst"), col("count").as("count_dst"), col("neighbors").as("nb_dst"))
-    edges.join(atSrc, Seq("src")).join(atDst, Seq("dst"))
-      .withColumn("common_neighbors",
-        commonNeighbors(col("nb_src"), col("nb_dst"), col("src"), col("dst")))
-      .withColumn("count_common", size(col("common_neighbors")))
-  }
-
-  /** Full r-metrics table for every edge of `g`:
+  /** The r-metrics table for every edge of `g`:
     * `(src, dst, common_neighbors, r11, r12, r21, r22, keepit)`.
     * `common_neighbors` is the LEVEL-2 common-neighbor array — the
     * reference overwrote the level-1 array with the level-2 one before
     * emitting (`graph_tools/graph_tools.py:424-430`), and downstream edge
-    * weights consume exactly that.
-    */
-  def edgesWithMetrics(
-      g: PropertyGraph,
-      lvl1: DataFrame,
-      lvl2: DataFrame,
-      rLvl1Thres: Double,
-      rLvl2Thres: Double): DataFrame = {
-    val e = g.edges.select("src", "dst")
-    val withL1 = attachLevel(e, lvl1)
-      .select(col("src"), col("dst"),
-        ratio(col("count_common"), col("count_src")).as("r11"),
-        ratio(col("count_common"), col("count_dst")).as("r12"))
-    val withL2 = attachLevel(withL1, lvl2)
-      .select(col("src"), col("dst"), col("common_neighbors"),
-        col("r11"), col("r12"),
-        ratio(col("count_common"), col("count_src")).as("r21"),
-        ratio(col("count_common"), col("count_dst")).as("r22"))
-    withL2.withColumn("keepit",
-      col("r11") > rLvl1Thres || col("r12") > rLvl1Thres ||
-      col("r21") > rLvl2Thres || col("r22") > rLvl2Thres)
-  }
-
-  /** Convenience: compute both neighborhood levels and the metrics.
-    * `maxMidDegree` caps the level-2 hub fan-out
-    * ([[Skew.cappedMidAdjacency]]; `None` = exact).
+    * weights consume exactly that. `maxMidDegree` caps the level-2 hub
+    * fan-out ([[Skew.cappedMidAdjacency]]; `None` = exact).
     *
-    * `splitTwoHop` materializes the level-2 neighbor table
+    * Each edge joins the one [[Neighborhoods.neighbors]] table once on
+    * `src` and once on `dst` (the J2 shape, `graph_tools.py:406-423`,
+    * with both levels riding on one row). No vertex backfill is
+    * needed: the table lacks only vertices with no edge to another
+    * vertex, and the only edge such a vertex can have is a self-loop. The
+    * reference gave that edge ratios 0, `keepit = false` and no common
+    * neighbors, which yields no weight and no re-add downstream; dropping
+    * it here leaves the loop's next graph unchanged.
+    *
+    * `splitTwoHop` materializes the neighbor table
     * ([[graft.plans.Lineage.cut]]) before the two endpoint joins —
     * the round-16 step-1 experiment lever for the HGN loop at scale:
     * the fused 2-hop-aggregate + double-join + similarity chain is the
@@ -102,10 +69,28 @@ object RMetrics {
   def run(g: PropertyGraph, rLvl1Thres: Double, rLvl2Thres: Double,
       maxMidDegree: Option[Long] = None,
       splitTwoHop: Boolean = false): DataFrame = {
-    val lvl2 = Neighborhoods.neighbors(g, 2, maxMidDegree)
-    edgesWithMetrics(g,
-      Neighborhoods.neighbors(g, 1),
-      if (splitTwoHop) graft.plans.Lineage.cut(lvl2) else lvl2,
-      rLvl1Thres, rLvl2Thres)
+    val table = Neighborhoods.neighbors(g, maxMidDegree)
+    val nbs = if (splitTwoHop) graft.plans.Lineage.cut(table) else table
+    def at(end: String) = nbs.select(col("id").as(end),
+      col("neighbors1").as(s"n1_$end"), col("neighbors2").as(s"n2_$end"))
+    val (src, dst) = (col("src"), col("dst"))
+    // Each common-neighbor set is built once, in this projection: the
+    // ratios below read the counts inside `when` branches, and codegen
+    // shares no subexpression across conditional branches.
+    val common = g.edges.select("src", "dst")
+      .join(at("src"), Seq("src")).join(at("dst"), Seq("dst"))
+      .select(src, dst,
+        size(commonNeighbors(col("n1_src"), col("n1_dst"), src, dst)).as("common1"),
+        commonNeighbors(col("n2_src"), col("n2_dst"), src, dst).as("common_neighbors"),
+        col("n1_src"), col("n1_dst"), col("n2_src"), col("n2_dst"))
+    val common2 = size(col("common_neighbors"))
+    val r11 = ratio(col("common1"), size(col("n1_src")))
+    val r12 = ratio(col("common1"), size(col("n1_dst")))
+    val r21 = ratio(common2, size(col("n2_src")))
+    val r22 = ratio(common2, size(col("n2_dst")))
+    common.select(src, dst, col("common_neighbors"),
+      r11.as("r11"), r12.as("r12"), r21.as("r21"), r22.as("r22"),
+      (r11 > rLvl1Thres || r12 > rLvl1Thres ||
+        r21 > rLvl2Thres || r22 > rLvl2Thres).as("keepit"))
   }
 }

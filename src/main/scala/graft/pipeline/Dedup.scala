@@ -548,8 +548,7 @@ object Dedup {
     import graft.graph.{Communities, PropertyGraph}
     implicit val spark: org.apache.spark.sql.SparkSession = docs.sparkSession
     val e = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-    val v = e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
-    val comp = Communities.connectedComponents(PropertyGraph(v, e))
+    val comp = Communities.connectedComponents(PropertyGraph(PropertyGraph.endpoints(e), e))
     docs.select(col(idCol).as("doc_id"))
       .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),

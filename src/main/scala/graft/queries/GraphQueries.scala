@@ -107,8 +107,7 @@ object GraphQueries {
     implicit val spark: SparkSession = s
     cached(s, dir, "components") {
       val e = derivedEdges(s, dir)
-      val v = e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
-      Communities.connectedComponents(PropertyGraph(v, e))
+      Communities.connectedComponents(PropertyGraph(PropertyGraph.endpoints(e), e))
     }
   }
 
@@ -154,8 +153,7 @@ object GraphQueries {
 
   def supportGraph(s: SparkSession, dir: String): PropertyGraph = {
     val e = supportEdges(s, dir)
-    val v = e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
-    PropertyGraph(v, e)
+    PropertyGraph(PropertyGraph.endpoints(e), e)
   }
 
   // ---------------------------------------------------------------- oracle SQL
@@ -365,10 +363,13 @@ object GraphQueries {
          |LEFT JOIN (SELECT id, count(*) AS c FROM n2 GROUP BY id) c2 ON v.id = c2.id""".stripMargin) {
       (s, dir) =>
         val g = derivedGraph(s, dir)
-        Neighborhoods.neighbors(g, 1)
-          .select(col("id"), col("count").as("count1"))
-          .join(Neighborhoods.neighbors(g, 2)
-            .select(col("id"), col("count").as("count2")), Seq("id"))
+        // Backfill: a vertex with no neighbor has no table row (P6).
+        def sizeOf(nbs: String) =
+          size(coalesce(col(nbs), array().cast("array<bigint>"))).cast("long")
+        g.vertices.select("id")
+          .join(Neighborhoods.neighbors(g), Seq("id"), "full")
+          .select(col("id"), sizeOf("neighbors1").as("count1"),
+            sizeOf("neighbors2").as("count2"))
     },
 
     // ---- F2-F5 + J2: per-edge r-metrics and the keep-edge decision.
@@ -465,8 +466,7 @@ object GraphQueries {
       (s, dir) =>
         implicit val spark: SparkSession = s
         val e = derivedEdges(s, dir)
-        val v = e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
-        Communities.connectedComponents(PropertyGraph(v, e))
+        Communities.connectedComponents(PropertyGraph(PropertyGraph.endpoints(e), e))
     },
 
     // ---- A4 + J9 + G5: drop communities smaller than MINCOMP on the

@@ -162,11 +162,10 @@ object SourceMlQueries {
          |) GROUP BY component""".stripMargin) { (s, dir) =>
       implicit val spark: SparkSession = s
       val e = GraphQueries.derivedEdges(s, dir)
-      val v = e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
       val out = scratch(dir, "s03")
       // s03 measures the SINK; the components come from the session cache
       // (g08 measures the CC operator itself, fresh).
-      Sinks.saveCommunitiesCsv(PropertyGraph(v, e), out,
+      Sinks.saveCommunitiesCsv(PropertyGraph(PropertyGraph.endpoints(e), e), out,
         Some(GraphQueries.componentsCached(s, dir)))
       s.read.option("header", "true").csv(out)
         .select(col("component").cast("long").as("component"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.Bpe
 
 /** Train a BPE vocabulary over a documents table and persist the merge
@@ -88,16 +86,7 @@ object BpeTrain {
     }.getOrElse("auto")
     require(Seq("auto", "full", "delta", "local").contains(trainerFlag),
       s"trainer must be auto|full|delta|local, got '$trainerFlag'")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionTuning.autoConfs(docsPath, cpus.toInt)
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.localSession(docsPath)
 
     val docs = spark.read.parquet(docsPath).select("doc_id", "text")
     val nDocs = docs.count()

@@ -60,16 +60,7 @@ object CorpusReport {
     }
     val langModelDir = flags.get("langModel")
     val dupGroupsDir = flags.get("groups")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionTuning.autoConfs(docsPath, cpus.toInt)
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.localSession(docsPath)
 
     val t0 = System.nanoTime()
     val built = build(spark, docsPath, merges, packBudget, jaccardT,

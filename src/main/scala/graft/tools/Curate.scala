@@ -418,16 +418,7 @@ object Curate {
     val maxContam = positional.lift(2).map(_.toDouble).getOrElse(0.2)
     val packBudget = positional.lift(3).map(_.toLong).getOrElse(512L)
     val decontamMode = positional.lift(4).getOrElse("exact")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionTuning.autoConfs(docsPath, cpus.toInt)
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.localSession(docsPath)
     val stats = run(spark, docsPath, outDir, benchmark, jaccardT,
       maxContam, packBudget, decontamMode = decontamMode,
       pii = toggled(flags, "pii"), equalize = toggled(flags, "equalize"),

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{LangNb, TextAnalysis}
@@ -32,16 +31,7 @@ object LangNbTrain {
       val Array(k, v) = a.split("=", 2); k -> v
     }.toMap
     val n = flags.getOrElse("n", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionTuning.autoConfs(docsPath, cpus.toInt)
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.localSession(docsPath)
 
     val docs = spark.read.parquet(docsPath).select("doc_id", "text")
     val nDocs = docs.count()

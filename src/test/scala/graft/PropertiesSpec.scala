@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.{Betweenness, Neighborhoods, PropertyGraph}
+import graft.graph.{Betweenness, Neighborhoods, PropertyGraph, RMetrics}
 import graft.pipeline.Hashing
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -61,11 +61,8 @@ class PropertiesSpec extends SparkSpec {
 
   test("property: every vertex's lvl1 neighbors are a subset of lvl2") {
     for (seed <- seeds; edges = sampleEdges(seed) if edges.nonEmpty) {
-      val g = graphOf(edges)
-      val n1 = Neighborhoods.neighbors(g, 1).select(col("id"), col("neighbors").as("n1"))
-      val n2 = Neighborhoods.neighbors(g, 2).select(col("id"), col("neighbors").as("n2"))
-      val bad = n1.join(n2, "id")
-        .filter(size(array_except(col("n1"), col("n2"))) > 0)
+      val bad = Neighborhoods.neighbors(graphOf(edges))
+        .filter(size(array_except(col("neighbors1"), col("neighbors2"))) > 0)
       assert(bad.count() == 0, s"seed $seed")
     }
   }
@@ -201,6 +198,57 @@ class PropertiesSpec extends SparkSpec {
         .as[(Long, Long, Long)].collect().toSet
       assert(engine == oracleBetweenness(edges, maxLen, cap),
         s"seed $seed maxLen $maxLen cap $cap")
+    }
+    assert(capBinds, "the cap never excluded a vertex")
+  }
+
+  /** Plain-Scala r-metrics: neighbor sets over an adjacency `Map` (level 2
+    * expands only through mids of degree ≤ cap), then per edge row the
+    * common neighbors with both endpoints removed, the four guarded
+    * ratios and the keep decision. An edge row whose endpoint has no
+    * neighbor yields nothing. Rows are `(src, dst, r11, r12, r21, r22,
+    * keepit, common_neighbors)`, counted by multiplicity.
+    */
+  private def oracleRMetrics(edges: Seq[(Long, Long)], t1: Double, t2: Double,
+      cap: Option[Long]): Map[(Long, Long, Double, Double, Double, Double, Boolean, Set[Long]), Int] = {
+    val n1: Map[Long, Set[Long]] = edges.filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2).map { case (v, ns) => v -> ns.toSet }
+    val n2 = n1.map { case (v, ns) =>
+      v -> (ns ++ ns.filter(m => cap.forall(n1(m).size <= _)).flatMap(n1) - v) }
+    def ratio(common: Int, cnt: Int) = if (cnt > 0) common.toDouble / cnt else 0.0
+    edges.collect { case (s, d) if n1.contains(s) && n1.contains(d) =>
+      def cn(n: Map[Long, Set[Long]]) = (n(s) - s - d) intersect (n(d) - s - d)
+      val (c1, c2) = (cn(n1).size, cn(n2))
+      val (r11, r12) = (ratio(c1, n1(s).size), ratio(c1, n1(d).size))
+      val (r21, r22) = (ratio(c2.size, n2(s).size), ratio(c2.size, n2(d).size))
+      (s, d, r11, r12, r21, r22, r11 > t1 || r12 > t1 || r21 > t2 || r22 > t2, c2)
+    }.groupBy(identity).map { case (row, rows) => row -> rows.size }
+  }
+
+  test("property: r-metrics equal a plain-Scala oracle, exact and hub-capped") {
+    import spark.implicits._
+    var capBinds = false
+    for (seed <- seeds; edges = sampleEdges(seed) if edges.nonEmpty;
+         cap <- Seq(None, Some(2L))) {
+      // Messy input: every other edge again reversed, a self-loop on a
+      // vertex with neighbors, an isolated vertex (100), and an endpoint
+      // (the first edge's src) with no vertex row.
+      val (a0, b0) = edges.head
+      val messy = edges ++ edges.zipWithIndex.collect { case ((a, b), i) if i % 2 == 0 => (b, a) } :+
+        ((b0, b0))
+      val ids = (edges.flatMap { case (a, b) => Seq(a, b) }.distinct.filter(_ != a0)) :+ 100L
+      val g = PropertyGraph(ids.toDF("id"), messy.toDF("src", "dst"))
+      val degree = edges.distinct.flatMap { case (a, b) => Seq(a, b) }
+        .groupBy(identity).map(_._2.size)
+      capBinds ||= cap.exists(c => degree.exists(_ > c))
+      val engine = RMetrics.run(g, 0.5, 0.85, cap).collect().toSeq
+        .map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"),
+          r.getAs[Double]("r11"), r.getAs[Double]("r12"),
+          r.getAs[Double]("r21"), r.getAs[Double]("r22"),
+          r.getAs[Boolean]("keepit"), r.getAs[Seq[Long]]("common_neighbors").toSet))
+        .groupBy(identity).map { case (row, rows) => row -> rows.size }
+      assert(engine == oracleRMetrics(messy, 0.5, 0.85, cap), s"seed $seed cap $cap")
     }
     assert(capBinds, "the cap never excluded a vertex")
   }

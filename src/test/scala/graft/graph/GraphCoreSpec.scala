@@ -48,20 +48,41 @@ class GraphCoreSpec extends SparkSpec {
     assert(kept == Set(1L, 2L, 3L, 4L))
   }
 
-  test("level-1 neighborhoods with isolated backfill") {
-    val n1 = Neighborhoods.neighbors(g, 1).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Long](2).toSet)).toMap
+  private def neighborsAt(level: Int): Map[Long, collection.Seq[Long]] =
+    Neighborhoods.neighbors(g).collect()
+      .map(r => r.getAs[Long]("id") -> r.getSeq[Long](r.fieldIndex(s"neighbors$level")))
+      .toMap
+
+  test("level-1 neighborhoods: an isolated vertex has no row") {
+    val n1 = neighborsAt(1).map { case (v, nbs) => v -> (nbs.size.toLong, nbs.toSet) }
     assert(n1(1L) == (2L, Set(2L, 3L)))
     assert(n1(3L) == (3L, Set(1L, 2L, 4L)))
-    assert(n1(5L) == (0L, Set.empty[Long])) // backfilled
+    assert(!n1.contains(5L)) // g02 backfills it (next test)
+  }
+
+  test("g02: an isolated part gets count1 = count2 = 0") {
+    import spark.implicits._
+    // Orders 1 and 2 link parts 1-11-21, order 3 links 2-12 (co-purchase
+    // edges need the same last digit); part 5 is in no order.
+    val dir = java.nio.file.Files.createTempDirectory("g02").toString
+    def write(table: String, df: org.apache.spark.sql.DataFrame): Unit =
+      df.select(graft.Tables.contracts(table).map { case (c, t) =>
+        (if (df.columns.contains(c)) col(c) else lit(null)).cast(t).as(c) }: _*)
+        .write.parquet(s"$dir/$table.parquet")
+    write("part", Seq(1L, 11L, 21L, 2L, 12L, 5L).toDF("p_partkey"))
+    write("lineitem", Seq((1L, 1L), (1L, 11L), (2L, 11L), (2L, 21L), (3L, 2L), (3L, 12L))
+      .toDF("l_orderkey", "l_partkey"))
+    val counts = graft.SparkEntry.queries("g02_neighborhoods")(spark, dir)
+      .as[(Long, Long, Long)].collect().map(c => c._1 -> (c._2, c._3)).toMap
+    assert(counts == Map(1L -> (1L, 2L), 11L -> (2L, 2L), 21L -> (1L, 2L),
+      2L -> (1L, 1L), 12L -> (1L, 1L), 5L -> (0L, 0L)))
   }
 
   test("level-2 neighborhoods include level 1 and exclude self") {
-    val n2 = Neighborhoods.neighbors(g, 2).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](2).toSet).toMap
+    val n2 = neighborsAt(2).map { case (v, nbs) => v -> nbs.toSet }
     assert(n2(1L) == Set(2L, 3L, 4L))
     assert(n2(4L) == Set(1L, 2L, 3L))
-    assert(n2(5L) == Set.empty[Long])
+    assert(!n2.contains(5L))
   }
 
   test("r-metrics: hand-computed ratios and keep decision") {

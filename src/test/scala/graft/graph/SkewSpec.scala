@@ -46,8 +46,8 @@ class SkewSpec extends SparkSpec {
       val g = graphOf(edges)
       // no vertex in the generator can exceed degree 8; 100 never binds
       assert(
-        rows(Neighborhoods.neighbors(g, 2, Some(100L))) ==
-        rows(Neighborhoods.neighbors(g, 2, None)), s"neighbors seed $seed")
+        rows(Neighborhoods.neighbors(g, Some(100L))) ==
+        rows(Neighborhoods.neighbors(g, None)), s"neighbors seed $seed")
       assert(
         rows(Betweenness.run(g, maxLen = 2, Some(100L))) ==
         rows(Betweenness.run(g, maxLen = 2, None)), s"betweenness seed $seed")
@@ -60,16 +60,16 @@ class SkewSpec extends SparkSpec {
   test("binding cap cuts only expansion through the hub (neighborhoods)") {
     // Degrees: hub 0 -> 6; spokes 1,2 -> 2; spokes 3..6 -> 1. Cap 5
     // excludes only the hub as a mid.
-    val capped = Neighborhoods.neighbors(star, 2, Some(5L)).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](2).toSet).toMap
+    def level2(cap: Option[Long]) = Neighborhoods.neighbors(star, cap).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Seq[Long]]("neighbors2").toSet).toMap
+    val capped = level2(Some(5L))
     // spoke 3: exact 2-hop = {0} ∪ {1,2,4,5,6} via hub; capped = {0} only
     assert(capped(3L) == Set(0L))
     // spoke 1: direct {0,2}, via mid 2 (deg 2, allowed) adds 0; via hub cut
     assert(capped(1L) == Set(0L, 2L))
     // the hub itself keeps its full level-1 set and gains 2-hop via 1,2
     assert(capped(0L) == Set(1L, 2L, 3L, 4L, 5L, 6L))
-    val exact = Neighborhoods.neighbors(star, 2, None).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](2).toSet).toMap
+    val exact = level2(None)
     assert(exact(3L) == Set(0L, 1L, 2L, 4L, 5L, 6L))
   }
 
